@@ -14,10 +14,11 @@ Design (foreachBatch + two persisted index tables, NOT per-row state):
   but df DRIFTS as a stream grows, and a prefix index written under
   yesterday's order would be unsound against today's.  Prefix
   filtering is lossless under ANY fixed total order, so the streaming
-  index pins the order to md5(shingle) — content-defined, stable
-  forever, zero maintenance.  Pruning quality becomes
-  data-independent (a random permutation) instead of optimal; the
-  positional and size bounds still apply unchanged.
+  index starts in md5(shingle) order — content-defined, data-independent
+  pruning (a random permutation) instead of optimal — and each
+  full-horizon ``compact_setsim_index`` re-sorts it rarest-first by df,
+  committing the new order atomically with the index (one order per
+  epoch).  The positional and size bounds apply unchanged.
 - **Index tables** under ``index_dir``: ``prefix`` rows
   (shingle, doc_id, p, sz) — one row per PREFIX element of each
   accepted doc (~(1-t)·|s|+1 of them), the candidate-probe side,

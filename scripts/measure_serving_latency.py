@@ -6,19 +6,20 @@ The reference's implicit envelope is a 10 s processing trigger plus a
 — worst case ~15 s from event to visible number, and every poll
 re-reads and re-aggregates the whole retained file (dashboard/
 app.py:16-28).  Here the stats fold incrementally (streaming/
-serving.py): per batch one #groups-sized merge + a tiny state swap,
-so the trigger interval can drop to 1 s and the serve read is
-O(#groups) at any corpus size.
+serving.py): per batch one Spark job, a driver-side fold and one tiny
+file replace, so the trigger interval can drop to 1 s and the serve
+read is O(#groups) at any corpus size.
 
 Method: a writer thread emits one small JSONL file every ``emit_ms``
 with each record carrying its wall-clock emit time; the stream runs a
-processingTime trigger; the foreachBatch sink folds the partials into
-the state parquet (the real serving.merge_stats path) and, AFTER the
-swap — the moment a dashboard read would see the new numbers — stamps
-every record in the batch with the visibility time.  Latency per
-event = visible - emit; p50/p99 over all events.  A dashboard polling
-at interval P adds uniform(0, P) on top — reported separately rather
-than baked in, since the poll cadence is the consumer's choice.
+processingTime trigger; the foreachBatch sink runs the real serving
+body (``serving.fold_batch``: one Spark job, driver fold, atomic
+publish of the state file) and, AFTER it returns — the moment a
+dashboard read would see the new numbers — stamps every record in the
+batch with the visibility time.  Latency per event = visible - emit;
+p50/p99 over all events.  A dashboard polling at interval P adds
+uniform(0, P) on top — reported separately rather than baked in,
+since the poll cadence is the consumer's choice.
 
 Usage: python scripts/measure_serving_latency.py [seconds] [trigger_s]
 Prints one JSON line; paste into SCALING.md §18.
@@ -34,7 +35,7 @@ import tempfile
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -77,22 +78,10 @@ def main() -> None:
     latencies: list[tuple[float, int]] = []   # (latency_s, emit_ns)
 
     def sink(batch_df, batch_id: int) -> None:
-        rows = batch_df.collect()          # micro-batch: handful of rows
-        if not rows:
-            return
-        partial = serving.batch_partial_stats(batch_df)
-        try:
-            existing = batch_df.sparkSession.read.parquet(
-                f"{state_dir}/stats")
-        except Exception:
-            existing = None
-        merged = serving.merge_stats(existing, partial).coalesce(1)
-        merged.write.mode("overwrite").parquet(f"{state_dir}/stats_new")
-        batch_df.sparkSession.read.parquet(f"{state_dir}/stats_new") \
-            .write.mode("overwrite").parquet(f"{state_dir}/stats")
+        serving.fold_batch(batch_df, batch_id, state_dir)
         visible_ns = time.time_ns()        # a poll NOW sees these rows
-        latencies.extend(
-            ((visible_ns - r.emit_ns) / 1e9, r.emit_ns) for r in rows)
+        latencies.extend(((visible_ns - r.emit_ns) / 1e9, r.emit_ns)
+                         for r in batch_df.select("emit_ns").collect())
 
     stream = (spark.readStream
               .schema("post_id long, subreddit string, risk_score long, "
