@@ -57,18 +57,12 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.similarity import (_IVF_N_PROBE, _PQ_SUBDIM, _ivf_cells,
                                 _pq_assign)
+from .compaction import (compact_index, live_batch_ids, read_index,
+                         run_available_now, write_delta)
 
 
 def _p(index_dir: str, name: str) -> str:
     return os.path.join(index_dir, name)
-
-
-def _write_delta(df: DataFrame, batch_id: int, path: str) -> None:
-    (df.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(path))
 
 
 def index_batch(batch_df: DataFrame, batch_id: int, index_dir: str) -> None:
@@ -80,22 +74,20 @@ def index_batch(batch_df: DataFrame, batch_id: int, index_dir: str) -> None:
     codes = (assigned.filter(F.col("j") == 0)
              .select("vec_id", "sub", "code")
              .join(cells.select("vec_id", "cell"), "vec_id"))
-    _write_delta(codes, batch_id, _p(index_dir, "codes"))
-    _write_delta(assigned.select("vec_id", "sub", "j", "qv", "xv"),
+    write_delta(codes, batch_id, _p(index_dir, "codes"))
+    write_delta(assigned.select("vec_id", "sub", "j", "qv", "xv"),
                  batch_id, _p(index_dir, "vecs"))
     cbook = (assigned.groupBy("sub", "code", "j")
              .agg(F.sum("qv").alias("s_qv"), F.count("qv").alias("n")))
-    _write_delta(cbook, batch_id, _p(index_dir, "cbook"))
+    write_delta(cbook, batch_id, _p(index_dir, "cbook"))
     cellcen = (cells.select("cell", F.posexplode("q").alias("pos", "qv"))
                .groupBy("cell", "pos")
                .agg(F.sum("qv").alias("s_qv"), F.count("qv").alias("n")))
-    _write_delta(cellcen, batch_id, _p(index_dir, "cellcen"))
+    write_delta(cellcen, batch_id, _p(index_dir, "cellcen"))
 
 
 def _read(spark, index_dir: str, name: str, cols) -> DataFrame:
-    from .neardup import _read_index
-
-    df = _read_index(spark, _p(index_dir, name), cols)
+    df = read_index(spark, _p(index_dir, name), cols)
     if df is None:
         raise FileNotFoundError(f"no {name} table under {index_dir}")
     return df
@@ -104,9 +96,7 @@ def _read(spark, index_dir: str, name: str, cols) -> DataFrame:
 def _read_opt(spark, index_dir: str, name: str, cols):
     """Like ``_read`` but a missing table is a legitimate state (no
     delete has ever run): returns None instead of raising."""
-    from .neardup import _read_index
-
-    return _read_index(spark, _p(index_dir, name), cols)
+    return read_index(spark, _p(index_dir, name), cols)
 
 
 def _max_ingest_batch(spark, index_dir: str) -> int:
@@ -114,14 +104,7 @@ def _max_ingest_batch(spark, index_dir: str) -> int:
     plus, if compacted, the manifest horizon) — the horizon a
     tombstone freezes so replays of the delete batch subtract the
     SAME contributions even if ingest advanced in between."""
-    from .compaction import _batch_dirs, _batch_id_of, load_manifest
-
-    path = _p(index_dir, "vecs")
-    bids = [b for b in (_batch_id_of(d) for d in _batch_dirs(path))
-            if b is not None]
-    m = load_manifest(path)
-    if m is not None:
-        bids.append(int(m["through"]))
+    bids = live_batch_ids(_p(index_dir, "vecs"))
     if not bids:
         raise FileNotFoundError(f"no ingested batches under {index_dir}")
     return max(bids)
@@ -167,16 +150,14 @@ def delete_batch(spark, ids_df: DataFrame, batch_id: int,
     Contract: deletes apply to data ingested at or below the horizon
     taken when the delete is processed; an ingest batch racing the
     delete with a smaller-or-equal batch_id is covered by it."""
-    from .neardup import _read_index
-
     tombs_path = _p(index_dir, "tombs")
     own_dir = os.path.join(tombs_path, f"batch_id={batch_id}")
     if os.path.isdir(own_dir):  # replay of a committed delete: no-op
         return
     ids = ids_df.select("vec_id").distinct().localCheckpoint(eager=True)
     thru = _max_ingest_batch(spark, index_dir)
-    prior = _read_index(spark, tombs_path, ["vec_id", "thru_ingest"],
-                        before_batch=batch_id)
+    prior = read_index(spark, tombs_path, ["vec_id", "thru_ingest"],
+                       before_batch=batch_id)
     vecs = _read(spark, index_dir, "vecs",
                  ["vec_id", "sub", "j", "qv", "batch_id"])
     codes = _read(spark, index_dir, "codes",
@@ -210,7 +191,7 @@ def delete_batch(spark, ids_df: DataFrame, batch_id: int,
     neg_cb = (doomed.groupBy("sub", "code", "j")
               .agg((-F.sum("qv")).alias("s_qv"),
                    (-F.count("qv")).alias("n")))
-    _write_delta(neg_cb, batch_id, _p(index_dir, "cbook_neg"))
+    write_delta(neg_cb, batch_id, _p(index_dir, "cbook_neg"))
     # negative coarse-centroid partials: same components re-keyed to
     # (cell, flat position) — cellcen's q[pos] IS vecs.qv at
     # pos = sub*SUBDIM + j (both are floor(x*1e6) of the embedding)
@@ -220,8 +201,8 @@ def delete_batch(spark, ids_df: DataFrame, batch_id: int,
               .groupBy("cell", "pos")
               .agg((-F.sum("qv")).alias("s_qv"),
                    (-F.count("qv")).alias("n")))
-    _write_delta(neg_cc, batch_id, _p(index_dir, "cellcen_neg"))
-    _write_delta(ids.withColumn("thru_ingest", F.lit(int(thru))),
+    write_delta(neg_cc, batch_id, _p(index_dir, "cellcen_neg"))
+    write_delta(ids.withColumn("thru_ingest", F.lit(int(thru))),
                  batch_id, tombs_path)  # the commit point
 
 
@@ -317,15 +298,8 @@ def run_incremental_ann(stream: DataFrame, checkpoint_dir: str,
                         index_dir: str):
     """Attach the index-maintenance sink to a stream of
     (vec_id, embedding) rows and drain available input."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        index_batch(batch_df, batch_id, index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        index_batch(df, bid, index_dir)))
 
 
 def run_ann_deletes(stream: DataFrame, checkpoint_dir: str,
@@ -337,15 +311,8 @@ def run_ann_deletes(stream: DataFrame, checkpoint_dir: str,
     a delete racing a compaction can see the codes/vecs manifests swap
     mid-join and under-subtract (the usual offline-maintenance
     contract, stated here because this sink READS the index)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delete_batch(batch_df.sparkSession, batch_df, batch_id, index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        delete_batch(df.sparkSession, df, bid, index_dir)))
 
 
 def compact_ann_index(spark, index_dir: str, through: int,
@@ -369,7 +336,6 @@ def compact_ann_index(spark, index_dir: str, through: int,
     rows), and REQUIRED: an unpurged dead row would have its batch_id
     rewritten up to the compaction horizon, potentially above its
     tombstone's thru_ingest, resurrecting it at serve time."""
-    from .compaction import compact_index
 
     def fold(keys):
         def f(live: DataFrame) -> DataFrame:

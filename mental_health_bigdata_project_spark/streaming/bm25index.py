@@ -6,10 +6,9 @@ parquet index; queries are served from the index with the SAME
 scoring core (``plans.retrieval.bm25_rank_df``), so streaming-equals-
 batch parity holds by construction and is pinned by test.
 
-Index layout under ``index_dir`` (all three are per-batch deltas,
-written with dynamic partition overwrite into their own ``batch_id=N``
-partition — a crash-retried batch overwrites itself, nothing reads
-prior index state during indexing, so replay is exactly-once with no
+Index layout under ``index_dir`` (all three are per-batch deltas;
+nothing reads prior index state during indexing, so the delta-log
+contract in ``compaction.py`` makes replay exactly-once with no
 ``before_batch`` pruning needed):
 
 - ``postings/``  (token, doc_id, tf)  partitioned by (batch_id, bucket)
@@ -47,6 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.retrieval import bm25_rank_df
 from ..plans.textops import tokens_col
+from .compaction import read_index, run_available_now, write_delta
 
 N_BUCKETS = 64
 
@@ -67,32 +67,19 @@ def index_batch(batch_df: DataFrame, batch_id: int,
     dl = (toks.groupBy("doc_id")
           .agg(F.count("*").cast("bigint").alias("dl")))
 
-    (tf.withColumn("batch_id", F.lit(batch_id))
-     .withColumn("bucket", _bucket(F.col("token")))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id", "bucket")
-     .parquet(os.path.join(index_dir, "postings")))
-    (dl.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "doclen")))
-    (dl.agg(F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.col("dl").cast("decimal(18,0)")).cast("decimal(18,0)")
-            .alias("sum_dl"))
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "stats")))
+    write_delta(tf.withColumn("bucket", _bucket(F.col("token"))), batch_id,
+                os.path.join(index_dir, "postings"),
+                partition_by=("batch_id", "bucket"))
+    write_delta(dl, batch_id, os.path.join(index_dir, "doclen"))
+    write_delta(dl.agg(F.count("*").cast("bigint").alias("n_docs"),
+                       F.sum(F.col("dl").cast("decimal(18,0)"))
+                       .cast("decimal(18,0)").alias("sum_dl")),
+                batch_id, os.path.join(index_dir, "stats"))
 
 
 def _read_tombs(spark, index_dir: str, before_batch: int | None = None):
-    from .neardup import _read_index
-
-    return _read_index(spark, os.path.join(index_dir, "tombs"),
-                       ["doc_id"], before_batch=before_batch)
+    return read_index(spark, os.path.join(index_dir, "tombs"),
+                      ["doc_id"], before_batch=before_batch)
 
 
 def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
@@ -114,8 +101,6 @@ def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
     find no doclen rows for its ids and overwrite its stats_neg
     partition with zero partials — silently undoing the deletion in
     served N/avgdl while the positive stats still count the docs."""
-    from .neardup import _read_index
-
     own_dir = os.path.join(index_dir, "tombs", f"batch_id={batch_id}")
     if os.path.isdir(own_dir):
         return
@@ -123,8 +108,8 @@ def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
     prior = _read_tombs(spark, index_dir, before_batch=batch_id)
     if prior is not None:
         ids = ids.join(prior, "doc_id", "left_anti")
-    dl = _read_index(spark, os.path.join(index_dir, "doclen"),
-                     ["doc_id", "dl"])
+    dl = read_index(spark, os.path.join(index_dir, "doclen"),
+                    ["doc_id", "dl"])
     if dl is None:
         raise FileNotFoundError(f"no doclen table under {index_dir}")
     # tombstone only ids the index actually holds: a delete of a
@@ -135,19 +120,12 @@ def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
     ids = (ids.join(dl.select("doc_id"), "doc_id", "left_semi")
            .localCheckpoint(eager=True))
     doomed = dl.join(ids, "doc_id", "left_semi")
-    (doomed.agg((-F.count("*")).cast("bigint").alias("n_docs"),
-                (-F.sum(F.col("dl").cast("decimal(18,0)")))
-                .cast("decimal(18,0)").alias("sum_dl"))
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "stats_neg")))
-    (ids.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "tombs")))  # the commit point
+    write_delta(doomed.agg((-F.count("*")).cast("bigint").alias("n_docs"),
+                           (-F.sum(F.col("dl").cast("decimal(18,0)")))
+                           .cast("decimal(18,0)").alias("sum_dl")),
+                batch_id, os.path.join(index_dir, "stats_neg"))
+    write_delta(ids, batch_id,
+                os.path.join(index_dir, "tombs"))  # the commit point
 
 
 def run_bm25_deletes(stream: DataFrame, checkpoint_dir: str,
@@ -155,16 +133,8 @@ def run_bm25_deletes(stream: DataFrame, checkpoint_dir: str,
     """Attach the tombstone-delete sink to a (doc_id) stream and drain
     available input.  Run deletes and compaction mutually exclusive
     (the annindex.py contract — this sink reads the index)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        delete_docs_batch(batch_df.sparkSession, batch_df, batch_id,
-                          index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        delete_docs_batch(df.sparkSession, df, bid, index_dir)))
 
 
 def bm25_query(spark, index_dir: str,
@@ -182,29 +152,18 @@ def bm25_query(spark, index_dir: str,
     Querying an index no batch has committed to yet (stream bring-up,
     or a first write that died leaving only ``_temporary``) returns an
     EMPTY top-k rather than leaking AnalysisException to the serving
-    layer — the same missing-path contract as ``neardup._read_index``;
-    any other read failure (corrupt footers, permissions) still
-    raises."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import read_live
-
+    layer — the same missing-path contract as ``read_index``; any
+    other read failure (corrupt footers, permissions) still raises."""
     qt = spark.createDataFrame(queries, "query_id int, term string")
     terms = sorted({t for _, t in queries})
     import zlib
     buckets = sorted({zlib.crc32(t.encode()) % N_BUCKETS for t in terms})
 
     def _live(table, schema):
-        try:
-            return read_live(spark, os.path.join(index_dir, table))
-        except AnalysisException as e:
-            msg = str(e)
-            if ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                    or "UNABLE_TO_INFER_SCHEMA" in msg):
-                return spark.createDataFrame([], schema)
-            raise
+        df = read_index(spark, os.path.join(index_dir, table), ["*"])
+        return df if df is not None else spark.createDataFrame([], schema)
 
-    # read_live resolves compacted-store ∪ deltas when the index has
+    # read_index resolves compacted-store ∪ deltas when the index has
     # been compacted (streaming/compaction.py); the bucket filter
     # partition-prunes BOTH parts (the compacted store keeps bucket
     # partitioning)
@@ -247,8 +206,5 @@ def stream_bm25_index(spark, in_dir: str, index_dir: str,
               .schema("doc_id bigint, text string")
               .option("maxFilesPerTrigger", 1)
               .json(in_dir))
-    return (stream.writeStream
-            .foreachBatch(lambda df, bid: index_batch(df, bid, index_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        index_batch(df, bid, index_dir)))

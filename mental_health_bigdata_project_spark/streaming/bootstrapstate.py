@@ -12,10 +12,9 @@ estimator.  Streaming == batch holds bit-for-bit by construction
 (integer weights, DECIMAL(28,12) weighted sums, decimal addition
 exact) and is pinned against the oracle-checked query in test.
 
-Exactly-once story as every sibling: a delta depends only on its own
-batch, lands in its own ``batch_id=N`` partition via dynamic partition
-overwrite; sum-fold compaction leaves ONE 64-value row regardless of
-stream length — the replicate state of a 100 TB stream is 64 numbers.
+Exactly-once is the delta-log contract in ``compaction.py``; sum-fold
+compaction leaves ONE 64-value row regardless of stream length — the
+replicate state of a 100 TB stream is 64 numbers.
 """
 
 from __future__ import annotations
@@ -25,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.quality import _N_BOOT, boot_hash_cols, boot_weight
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 _DEC = "decimal(28,12)"
 
@@ -34,6 +35,13 @@ def _boot_path(index_dir: str) -> str:
 
 
 _COLS = [c for r in range(_N_BOOT) for c in (f"n{r}", f"s{r}")]
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """All partials summed into one 64-value row."""
+    return live.agg(
+        *[F.sum(c).cast("bigint" if c.startswith("n") else _DEC).alias(c)
+          for c in _COLS])
 
 
 def bootstrap_batch(batch_df: DataFrame, batch_id: int,
@@ -52,25 +60,13 @@ def bootstrap_batch(batch_df: DataFrame, batch_id: int,
         aggs.append(F.sum(f"w{r}").cast("bigint").alias(f"n{r}"))
         aggs.append(F.sum((F.col(f"w{r}") * F.col("value")).cast(_DEC))
                     .cast(_DEC).alias(f"s{r}"))
-    (proj.agg(*aggs)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_boot_path(index_dir)))
+    write_delta(proj.agg(*aggs), batch_id, _boot_path(index_dir))
 
 
 def read_bootstrap_ci(spark, index_dir: str) -> DataFrame:
     """Serve (rep, n_eff, boot_mean) from the summed partials —
     bit-identical to ``stat_bootstrap_ci`` over the ingested union."""
-    from .neardup import _read_index
-
-    parts = _read_index(spark, _boot_path(index_dir), _COLS)
-    if parts is None:
-        raise FileNotFoundError(f"no boot index at {_boot_path(index_dir)}")
-    folded = parts.agg(
-        *[F.sum(c).cast("bigint" if c.startswith("n") else _DEC).alias(c)
-          for c in _COLS])
+    folded = read_state(spark, _boot_path(index_dir), _fold)
     pairs = ", ".join(f"{r}, n{r}, CAST(s{r} AS DOUBLE)"
                       for r in range(_N_BOOT))
     return (folded.selectExpr(
@@ -85,25 +81,11 @@ def run_incremental_bootstrap(stream: DataFrame, checkpoint_dir: str,
                               index_dir: str):
     """Attach the replicate-partial sink to an (event_id, value)
     stream and drain available input."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        bootstrap_batch(batch_df, batch_id, index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        bootstrap_batch(df, bid, index_dir)))
 
 
 def compact_bootstrap_index(spark, index_dir: str, through: int) -> dict:
     """Sum-fold compaction: all deltas collapse to one 64-value row."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        return live.agg(
-            *[F.sum(c).cast("bigint" if c.startswith("n") else _DEC)
-              .alias(c) for c in _COLS])
-
     return compact_index(spark, _boot_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

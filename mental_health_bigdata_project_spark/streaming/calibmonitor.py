@@ -16,11 +16,8 @@ identical arithmetic as the batch query, plus an alarm when ECE
 exceeds a threshold — the "recalibrate now" tripwire that pairs with
 ``ml_platt_scaling``'s fix step.
 
-Exactly-once story as momentstate.py: a delta depends only on its own
-batch (no prior-state read), lands in its own ``batch_id=N``
-partition via dynamic partition overwrite, so a crash-retried batch
-overwrites itself bit-identically; compaction folds deltas to one row
-per bin.  At 100 TB: state is four numbers per bin (40 total), fact
+Exactly-once is the delta-log contract in ``compaction.py``;
+compaction folds deltas to one row per bin.  At 100 TB: state is four numbers per bin (40 total), fact
 rows are never revisited, any time-slice re-aggregates after the
 fact.
 """
@@ -32,6 +29,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.quality import _CALIB_BINS, _logreg_d_features, _logreg_d_z
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 ECE_ALARM = 0.10        # "recalibrate" tripwire on the served ECE
 
@@ -40,6 +39,14 @@ _D18 = "decimal(38,18)"
 
 def _bins_path(index_dir: str) -> str:
     return os.path.join(index_dir, "calib_bins")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-bin sums — decimal-exact."""
+    return live.groupBy("bin").agg(
+        F.sum("n").cast("bigint").alias("n"),
+        F.sum("sp").cast(_D18).alias("sp"),
+        F.sum("sy").cast(_D18).alias("sy"))
 
 
 def build_calibration_artifact(beta: DataFrame, artifact_dir: str) -> None:
@@ -74,11 +81,7 @@ def calibration_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
              .agg(F.count("*").cast("bigint").alias("n"),
                   F.sum(F.col("p").cast(_D18)).alias("sp"),
                   F.sum(F.col("y").cast(_D18)).alias("sy")))
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_bins_path(index_dir)))
+    write_delta(delta, batch_id, _bins_path(index_dir))
 
 
 def serve_calibration(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -86,17 +89,7 @@ def serve_calibration(spark: SparkSession, index_dir: str) -> DataFrame:
     ml_calibration_bins' exact arithmetic (decimal partial sums merge
     exactly, so streaming == batch bit-for-bit), plus the ECE alarm
     flag."""
-    from .neardup import _read_index
-
-    bins = _read_index(spark, _bins_path(index_dir),
-                       ["bin", "n", "sp", "sy"])
-    if bins is None:
-        raise FileNotFoundError(
-            f"no calibration index at {_bins_path(index_dir)}")
-    b = (bins.groupBy("bin")
-         .agg(F.sum("n").cast("bigint").alias("n"),
-              F.sum("sp").cast(_D18).alias("sp"),
-              F.sum("sy").cast(_D18).alias("sy"))
+    b = (read_state(spark, _bins_path(index_dir), _fold)
          .select("bin", "n", F.col("sp").cast("double").alias("sp"),
                  F.col("sy").cast("double").alias("sy"))
          .localCheckpoint(eager=True))     # 10 rows, feeds ece + output
@@ -123,27 +116,12 @@ def run_incremental_calibration(stream: DataFrame, checkpoint_dir: str,
                                 index_dir: str, artifact_dir: str):
     """Attach the calibration sink to a stream and drain available
     input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        calibration_batch(batch_df, batch_id, index_dir, artifact_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        calibration_batch(df, bid, index_dir, artifact_dir)))
 
 
 def compact_calibration_index(spark: SparkSession, index_dir: str,
                               through: int) -> dict:
     """Sum-fold compaction: deltas collapse to one row per bin."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        return live.groupBy("bin").agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("sp").cast(_D18).alias("sp"),
-            F.sum("sy").cast(_D18).alias("sy"))
-
     return compact_index(spark, _bins_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

@@ -15,11 +15,10 @@ state — same recipe as streaming/neardup.py):
   micro-batch that added them: at 100 TB the index is ~1/6th of corpus
   bytes (one fp per 30 tokens) and the probe is a hash join on the fp
   key against an append-only parquet — no growing driver state.
-- Exactly-once on replay: accepted output and the index delta both
-  land in `batch_id=N` partitions via dynamic partition overwrite, so
-  a retried batch overwrites its own partitions.  The index delta is
-  the set of fps this batch RETAINED (first occurrences), which is
-  exactly what must block future batches.
+- Exactly-once on replay: the delta-log contract in
+  ``compaction.py``.  The index delta is the set of fps this batch
+  RETAINED (first occurrences), which is exactly what must block
+  future batches.
 """
 
 from __future__ import annotations
@@ -29,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import chunk_fingerprints_df
+from .compaction import read_index, run_available_now, write_delta
 
 
 def _index_path(index_dir: str) -> str:
@@ -49,9 +49,8 @@ def rewrite_batch_against_index(batch_df: DataFrame, batch_id: int,
         batch_df = gate(batch_df)
     flat = chunk_fingerprints_df(batch_df)
 
-    from .neardup import _read_index
     idx = _index_path(index_dir)
-    seen = _read_index(spark, idx, ["fp"], before_batch=batch_id)
+    seen = read_index(spark, idx, ["fp"], before_batch=batch_id)
     seen = seen.distinct() if seen is not None else None
 
     if seen is not None:
@@ -79,17 +78,8 @@ def rewrite_batch_against_index(batch_df: DataFrame, batch_id: int,
                        lambda s: s["chunk"]), " ").alias("text"),
                     F.count("*").cast("int").alias("n_kept")))
 
-    (rebuilt.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(out_dir, "accepted")))
-    (kept.select("fp").distinct()
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(idx))
+    write_delta(rebuilt, batch_id, os.path.join(out_dir, "accepted"))
+    write_delta(kept.select("fp").distinct(), batch_id, idx)
 
 
 def stream_chunk_dedup(spark, in_dir: str, out_dir: str, index_dir: str,
@@ -101,9 +91,6 @@ def stream_chunk_dedup(spark, in_dir: str, out_dir: str, index_dir: str,
               .schema("doc_id bigint, text string")
               .option("maxFilesPerTrigger", 1)
               .json(in_dir))
-    return (stream.writeStream
-            .foreachBatch(lambda df, bid: rewrite_batch_against_index(
-                df, bid, out_dir, index_dir, gate=gate))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        rewrite_batch_against_index(
+            df, bid, out_dir, index_dir, gate=gate)))

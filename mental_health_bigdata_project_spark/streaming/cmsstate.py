@@ -13,12 +13,9 @@ computed over the union of every ingested batch, by construction.
 
 Family ledger: hllcount.py merges registers by MAX, momentstate.py
 moments by SUM, histstate.py bucket counts by SUM, this merges CMS
-counters by SUM.  Exactly-once/compaction mechanics identical to the
-siblings: deltas depend only on their own batch (no prior-state read,
-so replay needs no before_batch pruning — a retried batch just
-rewrites its own partition with identical rows), and
-``compact_cms_index`` sum-folds the delta log back to one row per
-live counter.
+counters by SUM.  Exactly-once is the delta-log contract in
+``compaction.py``; ``compact_cms_index`` sum-folds the delta log back
+to one row per live counter.
 """
 
 from __future__ import annotations
@@ -29,10 +26,18 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import (_CMS_D, cms_bucket_col, cms_bucket_rows,
                              cms_table, tokens_col)
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 
 def _cms_path(index_dir: str) -> str:
     return os.path.join(index_dir, "cms")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-(row_i, bucket) counter sums."""
+    grp = [c for c in live.columns if c != "n"]
+    return live.groupBy(*grp).agg(F.sum("n").cast("bigint").alias("n"))
 
 
 def cms_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -40,12 +45,8 @@ def cms_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     """One micro-batch of CMS maintenance (the foreachBatch body,
     callable directly for tests / backfills)."""
     toks = batch_df.select(F.explode(tokens_col(text_col)).alias("token"))
-    (cms_table(cms_bucket_rows(toks))
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_cms_path(index_dir)))
+    write_delta(cms_table(cms_bucket_rows(toks)), batch_id,
+                _cms_path(index_dir))
 
 
 def read_estimates(spark, index_dir: str, tokens: list[str]) -> DataFrame:
@@ -68,14 +69,7 @@ def read_estimates(spark, index_dir: str, tokens: list[str]) -> DataFrame:
     rows and joins the merged counter table ONCE — building the d
     row-tables as separate joins would re-aggregate the whole delta
     log d times per serve (the reused-subframes-re-execute rule)."""
-    from .neardup import _read_index
-
-    cms = _read_index(spark, _cms_path(index_dir),
-                      ["row_i", "bucket", "n"])
-    if cms is None:
-        raise FileNotFoundError(f"no CMS index at {_cms_path(index_dir)}")
-    merged = (cms.groupBy("row_i", "bucket")
-              .agg(F.sum("n").cast("bigint").alias("n")))
+    merged = read_state(spark, _cms_path(index_dir), _fold)
     raw = spark.createDataFrame([(t,) for t in tokens], "token string")
     # NULL-safe: for a None probe the == predicate is NULL, ~NULL is
     # NULL, and a bare filter() would silently DROP the row instead of
@@ -106,24 +100,11 @@ def run_incremental_cms(stream: DataFrame, checkpoint_dir: str,
                         index_dir: str, **kwargs):
     """Attach the CMS-maintenance sink to a document stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        cms_batch(batch_df, batch_id, index_dir, **kwargs)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        cms_batch(df, bid, index_dir, **kwargs)))
 
 
 def compact_cms_index(spark, index_dir: str, through: int) -> dict:
     """Sum-fold compaction to one row per live (row_i, bucket)."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c != "n"]
-        return live.groupBy(*grp).agg(F.sum("n").cast("bigint").alias("n"))
-
     return compact_index(spark, _cms_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

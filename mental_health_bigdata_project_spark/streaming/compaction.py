@@ -1,11 +1,35 @@
-"""Offline compaction for the log-structured streaming indexes.
+"""The delta log every log-structured streaming store shares, and its
+offline compaction.
 
-Every incremental sink in this package (chunk/span/near dedup, the
-BM25 index) appends per-batch delta partitions ``batch_id=N`` forever;
-probes stay hash joins, but at 100 TB the file count grows without
-bound and the batch-pruning reads touch ever more partitions.  This
-module is the promised maintenance path (SCALING.md §7): rewrite all
-deltas through batch N into one consolidated store, atomically.
+This module is the ONLY owner of the ``batch_id=N`` delta-log layout.
+Every incremental sink in this package (chunk/span/near/setsim dedup,
+the BM25 and ANN indexes, the graph state, the mergeable-state
+monitors, ``pipeline.write_batch``) writes through ``write_delta``,
+reads prior state through ``read_index`` / ``read_state``, and drains
+its stream through ``run_available_now``.
+
+The delta-log contract (exactly-once, stated once here):
+
+- A micro-batch writes its delta into its OWN ``batch_id=N`` partition
+  via dynamic partition overwrite (``write_delta``), so a crash-retried
+  batch overwrites its own partitions instead of appending duplicates.
+- A sink whose delta depends only on its own batch (every mergeable-
+  state member) never reads prior state, so replay is exactly-once
+  with zero read-modify-write.  A sink that DOES read prior state
+  (the dedup indexes, the graph frontier) passes ``before_batch=N`` to
+  ``read_index`` so a replayed batch never sees its own committed
+  delta as prior state.
+- A mergeable-state member is three things on top of this layout: its
+  delta expression, ONE associative ``fold`` (live rows -> combined
+  rows), and an estimator.  Serving is ``estimator(read_state(spark,
+  path, fold))``; compaction is ``compact_index(transform=fold)`` —
+  the same fold, so the served state before and after compaction is
+  identical by construction.
+
+This module is also the maintenance path (SCALING.md §7): at 100 TB
+the delta file count grows without bound, so ``compact_index``
+rewrites all deltas through batch N into one consolidated store,
+atomically.
 
 Snapshot layout (inside each table directory):
 
@@ -23,8 +47,8 @@ Snapshot layout (inside each table directory):
                            "_compacted_v{k}", "through": N}; written
                            via tmp-file + os.replace (atomic on POSIX)
 
-Readers (``neardup._read_index``, ``bm25index.bm25_query``) resolve
-the live view as ``compacted ∪ deltas(batch_id > through)``.  Crash
+Readers (``read_index``, ``bm25index.bm25_query``) resolve the live
+view as ``compacted ∪ deltas(batch_id > through)``.  Crash
 safety falls out of the ordering: a crash after writing the compacted
 dir but before the manifest leaves an orphan dir readers ignore; a
 crash after the manifest but before garbage collection leaves stale
@@ -34,7 +58,7 @@ is ever readable twice.
 CONTRACT: only compact through batches the streaming checkpoint has
 fully committed.  A compacted batch can no longer replay (its delta
 partition is gone and its rows carry ``batch_id = through``), so
-``_read_index`` refuses ``before_batch <= through`` loudly rather
+``read_index`` refuses ``before_batch <= through`` loudly rather
 than silently treating a replayed batch's own data as prior state.
 """
 
@@ -45,6 +69,7 @@ import json
 import os
 import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 
@@ -82,18 +107,25 @@ def load_manifest(table_path: str) -> dict | None:
         return json.load(f)
 
 
+def _is_missing(exc) -> bool:
+    """True iff ``exc`` means "no store yet": the path does not exist,
+    or a killed first write left a directory with nothing committed
+    into it (only ``_temporary`` — no schema to infer).  Anything else
+    (corrupt footers, permissions) is a real failure."""
+    msg = str(exc)
+    return ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
+            or "UNABLE_TO_INFER_SCHEMA" in msg)
+
+
 def _read_deltas(spark, table_path: str, after_batch: int):
     """Delta partitions with batch_id > after_batch, or None when every
     delta partition has been garbage-collected (the table dir then
     holds only underscore-prefixed entries Spark cannot infer a schema
     from)."""
-    from pyspark.errors import AnalysisException
     try:
         df = spark.read.parquet(table_path)
     except AnalysisException as e:
-        msg = str(e)
-        if "UNABLE_TO_INFER_SCHEMA" in msg or "Path does not exist" in msg \
-                or "PATH_NOT_FOUND" in msg:
+        if _is_missing(e):
             return None
         raise
     return df.filter(F.col("batch_id") > F.lit(after_batch))
@@ -124,6 +156,117 @@ def read_live(spark, table_path: str,
     if allow_missing_delta_columns:
         return comp.unionByName(deltas, allowMissingColumns=True)
     return comp.unionByName(deltas.select(*comp.columns))
+
+
+def write_delta(df: DataFrame, batch_id: int, path: str,
+                partition_by=("batch_id",)) -> None:
+    """Write ``df`` as micro-batch ``batch_id``'s delta of the table at
+    ``path``: a literal ``batch_id`` column, dynamic partition
+    overwrite, so a replayed batch rewrites only its own partitions.
+    ``partition_by`` names the partition columns of layouts that nest
+    another column beside ``batch_id`` (``("batch_id", "bucket")``,
+    the legacy ``("cell", "batch_id")`` vector index); ``df`` carries
+    those columns itself."""
+    (df.withColumn("batch_id", F.lit(batch_id))
+     .write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_by)
+     .parquet(path))
+
+
+def read_index(spark, path: str, cols, before_batch: int | None = None):
+    """Read a persisted index, returning None ONLY when the path does
+    not exist yet (first batch).  Any other failure — corrupt footer,
+    filesystem error, permissions — must raise and fail the batch so
+    the checkpoint retries it; swallowing it would silently disable
+    dedup for the batch and leak duplicates permanently.
+
+    ``before_batch`` is REQUIRED for exactly-once replay: a crash-
+    retried micro-batch N finds its own ``batch_id=N`` delta already
+    committed, and without ``batch_id < N`` partition pruning it would
+    treat its own fingerprints as prior duplicates and overwrite its
+    accepted partition with gutted output.  Pass the current batch_id;
+    the filter is a partition-pruned read, not a scan.
+
+    Compaction-aware: when a manifest is present the view is
+    compacted ∪ newer deltas, and replaying a batch at or below the
+    compaction horizon raises — its delta is gone and its rows carry
+    the horizon's batch_id, so the replay would silently see an empty
+    prior index and leak duplicates."""
+    manifest = load_manifest(path)
+    if manifest is not None and before_batch is not None \
+            and before_batch <= manifest["through"]:
+        raise ValueError(
+            f"batch {before_batch} is at or below the compaction "
+            f"horizon {manifest['through']} of {path}; compact only "
+            f"through checkpoint-committed batches")
+    try:
+        df = read_live(spark, path)
+    except AnalysisException as e:
+        if _is_missing(e):
+            return None
+        raise
+    if before_batch is not None:
+        df = df.filter(F.col("batch_id") < F.lit(before_batch))
+    return df.select(*cols)
+
+
+def read_state(spark, path: str, fold) -> DataFrame:
+    """Serve a mergeable-state store: ``fold`` applied to its live view
+    (without ``batch_id``) — the same fold ``compact_index`` gets as
+    its ``transform``.  Raises FileNotFoundError when no batch has
+    committed a delta yet."""
+    live = read_index(spark, path, ["*"])
+    if live is None:
+        raise FileNotFoundError(f"no delta store at {path}")
+    return fold(live.drop("batch_id"))
+
+
+def run_available_now(stream: DataFrame, checkpoint_dir: str, body):
+    """Attach ``body(batch_df, batch_id)`` to ``stream`` as its
+    foreachBatch sink and drain the available input (availableNow).
+    Returns the started query."""
+    return (stream.writeStream
+            .foreachBatch(body)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start())
+
+
+def live_batch_ids(table_path: str) -> list[int]:
+    """Batch ids of the table's live delta partitions, plus the
+    compaction horizon when a manifest exists."""
+    bids = [b for b in map(_batch_id_of, _batch_dirs(table_path))
+            if b is not None]
+    m = load_manifest(table_path)
+    if m is not None:
+        bids.append(int(m["through"]))
+    return bids
+
+
+def _check_through(table_path: str, through: int) -> int:
+    """Validate a compaction horizon against the table's live batches
+    and return the newest live batch id.  The horizon must name an
+    EXISTING batch: one above the newest live batch would make
+    ``read_live`` skip deltas written later with smaller ids (silent
+    data loss), and one below the oldest would write an empty,
+    schema-less snapshot that breaks every subsequent read."""
+    m = load_manifest(table_path)
+    if m is not None and through < m["through"]:
+        raise ValueError(
+            f"through={through} precedes existing compaction horizon "
+            f"{m['through']}")
+    live_bids = live_batch_ids(table_path)
+    if not live_bids:
+        raise ValueError(f"{table_path} has no batches to compact")
+    if through > max(live_bids):
+        raise ValueError(
+            f"through={through} exceeds newest live batch "
+            f"{max(live_bids)}; later deltas would become invisible")
+    if not any(b <= through for b in live_bids):
+        raise ValueError(
+            f"no batch at or below through={through} in {table_path}")
+    return max(live_bids)
 
 
 def compact_index(spark, table_path: str, through: int,
@@ -158,32 +301,8 @@ def compact_index(spark, table_path: str, through: int,
     setsim epoch pointer rides this: the prefix store's element order
     and the pointer to that order must never be readable separately).
     Returns the new manifest."""
+    _check_through(table_path, through)
     m = load_manifest(table_path)
-    if m is not None and through < m["through"]:
-        raise ValueError(
-            f"through={through} precedes existing compaction horizon "
-            f"{m['through']}")
-    # the horizon must name an EXISTING batch: a horizon above the
-    # newest live batch would make read_live skip deltas written later
-    # with smaller ids (silent data loss), and a horizon below the
-    # oldest would write an empty, schema-less snapshot that breaks
-    # every subsequent read
-    live_bids = []
-    for d in _batch_dirs(table_path):
-        bid = _batch_id_of(d)
-        if bid is not None:
-            live_bids.append(bid)
-    if m is not None:
-        live_bids.append(m["through"])
-    if not live_bids:
-        raise ValueError(f"{table_path} has no batches to compact")
-    if through > max(live_bids):
-        raise ValueError(
-            f"through={through} exceeds newest live batch "
-            f"{max(live_bids)}; later deltas would become invisible")
-    if not any(b <= through for b in live_bids):
-        raise ValueError(
-            f"no batch at or below through={through} in {table_path}")
     version = (m["version"] + 1) if m else 1
     dest_name = f"_compacted_v{version}"
 
@@ -276,8 +395,6 @@ def compact_bm25_index(spark, index_dir: str, through: int,
     ``delete_docs_batch`` short-circuits a replay whose own tombstone
     partition is committed: the replay can no longer recompute (and
     zero out) its stats_neg partial against the purged doclen."""
-    from pyspark.sql import functions as F
-
     from .bm25index import _read_tombs
 
     tombs = _read_tombs(spark, index_dir)
@@ -288,6 +405,11 @@ def compact_bm25_index(spark, index_dir: str, through: int,
         return (live if tombs is None
                 else live.join(tombs, "doc_id", "left_anti"))
 
+    def sum_stats(live):
+        return live.agg(
+            F.sum("n_docs").cast("bigint").alias("n_docs"),
+            F.sum("sum_dl").cast("decimal(18,0)").alias("sum_dl"))
+
     out = {
         "postings": compact_index(spark,
                                   os.path.join(index_dir, "postings"),
@@ -295,11 +417,8 @@ def compact_bm25_index(spark, index_dir: str, through: int,
                                   transform=purge),
         "doclen": compact_index(spark, os.path.join(index_dir, "doclen"),
                                 through, transform=purge),
-        "stats": compact_index(
-            spark, os.path.join(index_dir, "stats"), through,
-            transform=lambda live: live.agg(
-                F.sum("n_docs").cast("bigint").alias("n_docs"),
-                F.sum("sum_dl").cast("decimal(18,0)").alias("sum_dl"))),
+        "stats": compact_index(spark, os.path.join(index_dir, "stats"),
+                               through, transform=sum_stats),
     }
     if through_deletes is not None and tombs is not None:
         out["tombs"] = compact_index(
@@ -308,9 +427,5 @@ def compact_bm25_index(spark, index_dir: str, through: int,
         neg_path = os.path.join(index_dir, "stats_neg")
         if os.path.isdir(neg_path):
             out["stats_neg"] = compact_index(
-                spark, neg_path, through_deletes,
-                transform=lambda live: live.agg(
-                    F.sum("n_docs").cast("bigint").alias("n_docs"),
-                    F.sum("sum_dl").cast("decimal(18,0)")
-                    .alias("sum_dl")))
+                spark, neg_path, through_deletes, transform=sum_stats)
     return out

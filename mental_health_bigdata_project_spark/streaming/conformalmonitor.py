@@ -10,7 +10,8 @@ the shared ``conformal_fit``, PLUS the pooled MARGINAL quantile via
 ``conformal_marginal_qhat`` — the fairness arm) — a #groups-row
 reference table.  ``coverage_batch`` reduces each micro-batch to ONE
 (grp, covered, covered_marginal, total) delta row per group
-(sum-mergeable, exactly-once via batch_id partitions);
+(sum-mergeable, exactly-once by the delta-log contract in
+``compaction.py``);
 ``serve_coverage`` folds the deltas, flags any group whose empirical
 coverage has fallen materially below the nominal 90%, and reports the
 per-group GROUP-vs-MARGINAL coverage gap — the streaming face of
@@ -32,6 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.quality import (conformal_cell, conformal_fit,
                              conformal_marginal_qhat)
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 COVERAGE_ALARM = 0.85   # nominal 0.9 minus slack for sampling noise
 
@@ -54,7 +57,10 @@ def coverage_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
                    artifact_dir: str, type_col: str = "event_type",
                    value_col: str = "value") -> None:
     """One micro-batch of coverage maintenance: per group, how many
-    rows fell inside the frozen interval — two integers per group."""
+    rows fell inside the frozen interval.  The delta carries the
+    marginal BASIS (``total_marginal``, here equal to ``total``) so
+    it has the same schema as the compacted store: a store compacted
+    below its newest batch unions deltas and compacted rows by name."""
     spark = batch_df.sparkSession
     model = spark.read.parquet(os.path.join(artifact_dir, "model"))
     if "qhat_marginal" not in model.columns:
@@ -76,12 +82,9 @@ def coverage_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
                   F.sum(F.when(conformal_cell()
                                <= F.col("qhat_marginal"), 1).otherwise(0))
                   .cast("bigint").alias("covered_marginal"),
-                  F.count("*").cast("bigint").alias("total")))
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "coverage")))
+                  F.count("*").cast("bigint").alias("total"))
+             .withColumn("total_marginal", F.col("total")))
+    write_delta(delta, batch_id, os.path.join(index_dir, "coverage"))
 
 
 def _tolerate_old_state(df: DataFrame) -> DataFrame:
@@ -93,8 +96,8 @@ def _tolerate_old_state(df: DataFrame) -> DataFrame:
     coverage is then reported over the batches that actually recorded
     it (NULL when none have).  Caveat: Spark's plain parquet read does
     not merge schemas, so a directory MIXING pre- and post-upgrade
-    delta files should be compacted once at migration (the transform
-    below writes the unified schema); the helper guarantees the
+    delta files should be compacted once at migration (``_fold``
+    writes the unified schema); the helper guarantees the
     all-old and all-new layouts read correctly either way."""
     for c in ("covered_marginal", "total_marginal"):
         if c not in df.columns:
@@ -111,28 +114,33 @@ def _marginal_basis():
         F.when(F.col("covered_marginal").isNotNull(), F.col("total")))
 
 
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-group coverage sums.  Tolerates pre-fairness-arm deltas
+    (ADVICE r9) and carries the marginal BASIS, so the served gap stays
+    correct across mixed-era histories and compaction writes the
+    unified schema."""
+    return (_tolerate_old_state(live).groupBy("grp")
+            .agg(F.sum("covered").cast("bigint").alias("covered"),
+                 F.sum("covered_marginal").cast("bigint")
+                 .alias("covered_marginal"),
+                 F.sum(_marginal_basis()).cast("bigint")
+                 .alias("total_marginal"),
+                 F.sum("total").cast("bigint").alias("total")))
+
+
 def serve_coverage(spark: SparkSession, artifact_dir: str,
                    index_dir: str) -> DataFrame:
     """(event_type, n_test, n_covered, coverage, alarm) over
     everything ingested so far."""
-    from .compaction import read_live
-
-    cur = (_tolerate_old_state(
-               read_live(spark, os.path.join(index_dir, "coverage")))
-           .groupBy("grp")
-           .agg(F.sum("covered").cast("bigint").alias("n_covered"),
-                F.sum("covered_marginal").cast("bigint")
-                .alias("n_covered_marginal"),
-                F.sum(_marginal_basis()).cast("bigint")
-                .alias("n_test_marginal"),
-                F.sum("total").cast("bigint").alias("n_test")))
-    covg = F.col("n_covered").cast("double") / F.col("n_test")
+    cur = read_state(spark, os.path.join(index_dir, "coverage"), _fold)
+    covg = F.col("covered").cast("double") / F.col("total")
     # marginal coverage only over batches that recorded it (pre-r9
     # deltas lack the column — ADVICE r9); NULL when none have
-    covm = (F.col("n_covered_marginal").cast("double")
-            / F.col("n_test_marginal"))
+    covm = (F.col("covered_marginal").cast("double")
+            / F.col("total_marginal"))
     return cur.select(
-        F.col("grp").alias("event_type"), "n_test", "n_covered",
+        F.col("grp").alias("event_type"), F.col("total").alias("n_test"),
+        F.col("covered").alias("n_covered"),
         F.round(covg, 6).alias("coverage"),
         F.round(covm, 6).alias("coverage_marginal"),
         F.round(covg - covm, 6).alias("coverage_gap"),
@@ -142,31 +150,13 @@ def serve_coverage(spark: SparkSession, artifact_dir: str,
 def compact_coverage_state(spark: SparkSession, index_dir: str,
                            through: int) -> dict:
     """Sum-fold the per-batch coverage deltas — state stays one row
-    per group forever.  Tolerates pre-fairness-arm deltas (ADVICE r9)
-    and writes the unified schema, carrying the marginal BASIS so the
-    served gap stays correct across mixed-era histories."""
-    from .compaction import compact_index
-
-    return compact_index(
-        spark, os.path.join(index_dir, "coverage"), through,
-        transform=lambda live: _tolerate_old_state(live).groupBy("grp")
-        .agg(F.sum("covered").cast("bigint").alias("covered"),
-             F.sum("covered_marginal").cast("bigint")
-             .alias("covered_marginal"),
-             F.sum(_marginal_basis()).cast("bigint")
-             .alias("total_marginal"),
-             F.sum("total").cast("bigint").alias("total")))
+    per group forever."""
+    return compact_index(spark, os.path.join(index_dir, "coverage"),
+                         through, transform=_fold)
 
 
 def run_coverage_monitor(stream: DataFrame, checkpoint_dir: str,
                          index_dir: str, artifact_dir: str):
     """Attach the coverage sink to an events stream (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        coverage_batch(batch_df, batch_id, index_dir, artifact_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        coverage_batch(df, bid, index_dir, artifact_dir)))

@@ -11,8 +11,8 @@ reference data, persisted once.  ``drift_batch`` reduces each
 micro-batch to its (event_type, bucket, cnt) delta against the frozen
 boundaries — at most 10 rows per type per batch regardless of batch
 rows, written into the batch's own ``batch_id=N`` partition (the
-log-structured recipe: dynamic partition overwrite makes replay
-exactly-once with zero read-modify-write).  ``serve_psi`` sum-folds
+delta-log contract in ``compaction.py``: exactly-once with zero
+read-modify-write).  ``serve_psi`` sum-folds
 all deltas and scores PSI with the IDENTICAL
 ``psi_from_bucket_counts`` the oracle-checked batch query runs, so
 streaming == batch is by construction and pinned by test against
@@ -33,6 +33,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.quality import (psi_bucketize, psi_decile_boundaries,
                              psi_from_bucket_counts, psi_quantize)
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-(event_type, bucket) count sums."""
+    return live.groupBy("event_type", "bucket").agg(
+        F.sum("cnt").cast("bigint").alias("cnt"))
 
 
 def _cells(df: DataFrame, type_col: str, value_col: str) -> DataFrame:
@@ -75,24 +83,16 @@ def drift_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     the (event_type, bucket, cnt) delta into its own batch partition."""
     spark = batch_df.sparkSession
     bnd, _ = _read_baseline(spark, artifact_dir)
-    delta = psi_bucketize(_cells(batch_df, type_col, value_col), bnd)
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(index_dir, "buckets")))
+    write_delta(psi_bucketize(_cells(batch_df, type_col, value_col), bnd),
+                batch_id, os.path.join(index_dir, "buckets"))
 
 
 def serve_psi(spark: SparkSession, artifact_dir: str,
               index_dir: str) -> DataFrame:
     """(event_type, n_base, n_cur, psi, drift_flag) over everything
     ingested so far — the same scoring core as the batch query."""
-    from .compaction import read_live
-
+    cur = read_state(spark, os.path.join(index_dir, "buckets"), _fold)
     _, bcnt_base = _read_baseline(spark, artifact_dir)
-    cur = (read_live(spark, os.path.join(index_dir, "buckets"))
-           .groupBy("event_type", "bucket")
-           .agg(F.sum("cnt").cast("bigint").alias("cnt")))
     return psi_from_bucket_counts(bcnt_base, cur)
 
 
@@ -100,24 +100,13 @@ def compact_drift_state(spark: SparkSession, index_dir: str,
                         through: int) -> dict:
     """Sum-fold the per-batch bucket deltas through a checkpoint-
     committed batch — the store stays #types x 10 rows forever."""
-    from .compaction import compact_index
-
-    return compact_index(
-        spark, os.path.join(index_dir, "buckets"), through,
-        transform=lambda live: live.groupBy("event_type", "bucket")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt")))
+    return compact_index(spark, os.path.join(index_dir, "buckets"),
+                         through, transform=_fold)
 
 
 def run_drift_gate(stream: DataFrame, checkpoint_dir: str,
                    index_dir: str, artifact_dir: str):
     """Attach the drift-state sink to an events stream and drain
     available input (availableNow, the family's test runner shape)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        drift_batch(batch_df, batch_id, index_dir, artifact_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        drift_batch(df, bid, index_dir, artifact_dir)))

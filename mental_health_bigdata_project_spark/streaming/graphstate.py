@@ -35,9 +35,9 @@ bridge A -> B across a NULL and silently diverge from the windowed
 batch semantics.
 
 Exactly-once: batch N reads only ``batch_id < N`` state
-(``_read_index`` before_batch) and overwrites its own ``batch_id=N``
-partitions, so a crash-retried batch rewrites its deltas
-bit-identically — the setsim/neardup replay story, pinned by test.
+(``read_index`` before_batch) and overwrites its own ``batch_id=N``
+partitions — the delta-log contract in ``compaction.py``, pinned by
+test.
 
 At 100 TB: the corpus is touched once per batch (two narrow windowed
 passes); everything persistent is edge-relation- or
@@ -52,7 +52,8 @@ import os
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from .neardup import _read_index
+from .compaction import (compact_index, read_index, read_state,
+                         run_available_now, write_delta)
 
 _EV_COLS = ("user_id", "ts", "event_id", "event_type")
 
@@ -65,19 +66,30 @@ def _frontier_path(index_dir: str) -> str:
     return os.path.join(index_dir, "frontier")
 
 
+def _fold_edges(live: DataFrame) -> DataFrame:
+    return live.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+
+
+def _fold_frontier(ev: DataFrame) -> DataFrame:
+    """Each user's newest (ts, event_id, event_type) row."""
+    return (ev.groupBy("user_id")
+            .agg(F.max(F.struct("ts", "event_id", "event_type"))
+                 .alias("f"))
+            .select("user_id", F.col("f.ts").alias("ts"),
+                    F.col("f.event_id").alias("event_id"),
+                    F.col("f.event_type").alias("event_type")))
+
+
 def _read_frontier(spark, index_dir: str, batch_id: int):
     """(user_id, last_type): each user's newest prior event — newest
     by (ts, event_id), which under the ordering contract is also the
     newest batch's entry."""
-    fr = _read_index(spark, _frontier_path(index_dir),
-                     ["user_id", "ts", "event_id", "event_type"],
-                     before_batch=batch_id)
+    fr = read_index(spark, _frontier_path(index_dir), list(_EV_COLS),
+                    before_batch=batch_id)
     if fr is None:
         return None
-    return (fr.groupBy("user_id")
-            .agg(F.max(F.struct("ts", "event_id", "event_type"))
-                 .alias("f"))
-            .select("user_id", F.col("f.event_type").alias("last_type")))
+    return _fold_frontier(fr).select(
+        "user_id", F.col("event_type").alias("last_type"))
 
 
 def edges_batch(batch_df: DataFrame, batch_id: int,
@@ -113,34 +125,15 @@ def edges_batch(batch_df: DataFrame, batch_id: int,
     else:
         delta = within
 
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_edges_path(index_dir)))
-
-    newest = (ev.groupBy("user_id")
-              .agg(F.max(F.struct("ts", "event_id", "event_type"))
-                   .alias("f"))
-              .select("user_id", F.col("f.ts").alias("ts"),
-                      F.col("f.event_id").alias("event_id"),
-                      F.col("f.event_type").alias("event_type")))
-    (newest.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_frontier_path(index_dir)))
+    write_delta(delta, batch_id, _edges_path(index_dir))
+    write_delta(_fold_frontier(ev), batch_id, _frontier_path(index_dir))
 
 
 def read_edges(spark, index_dir: str) -> DataFrame:
     """(src, dst, w): the folded edge relation over every ingested
     batch.  Counts are integers carried as doubles (exact below 2^53),
     so the fold is exact and associative."""
-    ed = _read_index(spark, _edges_path(index_dir), ["src", "dst", "w"])
-    if ed is None:
-        raise FileNotFoundError(
-            f"no edge index at {_edges_path(index_dir)}")
-    return ed.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+    return read_state(spark, _edges_path(index_dir), _fold_edges)
 
 
 def read_pagerank(spark, index_dir: str) -> DataFrame:
@@ -173,38 +166,17 @@ def run_incremental_pagerank(stream: DataFrame, checkpoint_dir: str,
                              index_dir: str):
     """Attach the edge-maintenance sink to an events stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        edges_batch(batch_df, batch_id, index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        edges_batch(df, bid, index_dir)))
 
 
 def compact_graph_index(spark, index_dir: str, through: int) -> dict:
     """Compact both tables: edges fold by summation (one row per
     distinct transition), the frontier keeps each user's newest
-    event.  Manifest / GC / replay-guard mechanics are
-    compaction.compact_index's."""
-    from .compaction import compact_index
-
-    def fold_edges(live: DataFrame) -> DataFrame:
-        return live.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-
-    def fold_frontier(live: DataFrame) -> DataFrame:
-        return (live.groupBy("user_id")
-                .agg(F.max(F.struct("ts", "event_id", "event_type"))
-                     .alias("f"))
-                .select("user_id", F.col("f.ts").alias("ts"),
-                        F.col("f.event_id").alias("event_id"),
-                        F.col("f.event_type").alias("event_type")))
-
+    event."""
     return {
         "edges": compact_index(spark, _edges_path(index_dir), through,
-                               transform=fold_edges),
+                               transform=_fold_edges),
         "frontier": compact_index(spark, _frontier_path(index_dir),
-                                  through, transform=fold_frontier),
+                                  through, transform=_fold_frontier),
     }

@@ -10,10 +10,8 @@ Family ledger: hllcount.py merges registers by MAX, momentstate.py
 merges moments by SUM, this merges bucket counts by SUM — which makes
 it the streaming-quantiles design (p50/p99 latency over an unbounded
 stream) that exact approaches can't give without retaining every
-value.  Exactly-once/compaction mechanics identical to its siblings:
-deltas depend only on their own batch, land in ``batch_id=N``
-partitions, and ``compact_hist_index`` sum-folds them to one row per
-bucket.
+value.  Exactly-once is the delta-log contract in ``compaction.py``;
+``compact_hist_index`` sum-folds the deltas to one row per bucket.
 """
 
 from __future__ import annotations
@@ -24,10 +22,18 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.sketches import (
     hdr_bucket_midpoint, hdr_cents_expr, hdr_histogram, hdr_pick_buckets)
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 
 def _hist_path(index_dir: str) -> str:
     return os.path.join(index_dir, "hdr_hist")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-bucket count sums."""
+    grp = [c for c in live.columns if c != "cnt"]
+    return live.groupBy(*grp).agg(F.sum("cnt").cast("bigint").alias("cnt"))
 
 
 def hist_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -47,13 +53,8 @@ def hist_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     guarded = F.when(raw > 0, raw).otherwise(F.raise_error(F.concat(
         F.lit("hist_batch: value_expr must be a positive integer, got "),
         F.coalesce(raw.cast("string"), F.lit("NULL")))))
-    c = batch_df.select(guarded.alias("c"))
-    (hdr_histogram(c)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_hist_path(index_dir)))
+    write_delta(hdr_histogram(batch_df.select(guarded.alias("c"))),
+                batch_id, _hist_path(index_dir))
 
 
 def read_quantiles(spark, index_dir: str,
@@ -61,14 +62,7 @@ def read_quantiles(spark, index_dir: str,
     """Serve (q, est) from the summed bucket deltas — identical to the
     batch sketch's estimate on the union of ingested rows because
     bucket counts add exactly (sketch_hdr_merge pins the property)."""
-    from .neardup import _read_index
-
-    hist = _read_index(spark, _hist_path(index_dir), ["b_lo", "cnt"])
-    if hist is None:
-        raise FileNotFoundError(f"no histogram index at "
-                                f"{_hist_path(index_dir)}")
-    merged = hist.groupBy("b_lo").agg(F.sum("cnt").cast("bigint")
-                                      .alias("cnt"))
+    merged = read_state(spark, _hist_path(index_dir), _fold)
     pick = hdr_pick_buckets(spark, merged, qs)
     return pick.select(
         "q", F.round(hdr_bucket_midpoint() / 100.0, 4).alias("est"))
@@ -78,25 +72,11 @@ def run_incremental_hist(stream: DataFrame, checkpoint_dir: str,
                          index_dir: str, **kwargs):
     """Attach the histogram-maintenance sink to a stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        hist_batch(batch_df, batch_id, index_dir, **kwargs)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        hist_batch(df, bid, index_dir, **kwargs)))
 
 
 def compact_hist_index(spark, index_dir: str, through: int) -> dict:
     """Sum-fold compaction to one row per live bucket."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c != "cnt"]
-        return live.groupBy(*grp).agg(F.sum("cnt").cast("bigint")
-                                      .alias("cnt"))
-
     return compact_index(spark, _hist_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

@@ -15,11 +15,9 @@ Why this is the 100 TB streaming distinct-count design:
   batch) no matter how many rows the batch carried — contrast a
   dropDuplicates-based exact counter, whose state grows with the
   number of distinct keys ever seen.
-- Indexing never reads prior state (a register delta depends only on
-  its own batch), so replay needs no ``before_batch`` pruning: the
-  delta lands in its own ``batch_id=N`` partition via dynamic
-  partition overwrite, and a crash-retried batch overwrites itself
-  bit-identically — exactly-once with zero read-modify-write.
+- The delta depends only on its own batch, so the delta-log contract
+  in ``compaction.py`` makes replay exactly-once with zero
+  read-modify-write.
 - Serving reads the whole index but the index is (groups x m x
   batches) rows of three small columns; after compaction it is
   (groups x m).  ``compact_hll_index`` folds deltas by per-register
@@ -34,10 +32,18 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.sketches import _hll_estimate, _hll_registers
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 
 def _regs_path(index_dir: str) -> str:
     return os.path.join(index_dir, "hll_regs")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-(group, idx) register max — lossless and associative."""
+    grp = [c for c in live.columns if c not in ("idx", "mx")]
+    return live.groupBy(*grp, "idx").agg(F.max("mx").alias("mx"))
 
 
 def register_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -49,12 +55,8 @@ def register_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     partition."""
     keyed = batch_df.select(
         *group_cols, F.md5(F.col(key_col).cast("string")).alias("h"))
-    regs = _hll_registers(keyed, list(group_cols))
-    (regs.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_regs_path(index_dir)))
+    write_delta(_hll_registers(keyed, list(group_cols)), batch_id,
+                _regs_path(index_dir))
 
 
 def read_distinct_estimates(spark, index_dir: str,
@@ -65,15 +67,9 @@ def read_distinct_estimates(spark, index_dir: str,
     merge is the associative register fold — reading after ANY prefix
     of batches yields exactly the sketch of the union of those
     batches' rows."""
-    from .neardup import _read_index
-
-    regs = _read_index(spark, _regs_path(index_dir),
-                       [*group_cols, "idx", "mx"])
-    if regs is None:
-        raise FileNotFoundError(
-            f"no HLL register index at {_regs_path(index_dir)}")
-    merged = regs.groupBy(*group_cols, "idx").agg(F.max("mx").alias("mx"))
-    return _hll_estimate(merged, list(group_cols))
+    regs = read_state(spark, _regs_path(index_dir), lambda live: _fold(
+        live.select(*group_cols, "idx", "mx")))
+    return _hll_estimate(regs, list(group_cols))
 
 
 def run_incremental_hll(stream: DataFrame, checkpoint_dir: str,
@@ -81,29 +77,14 @@ def run_incremental_hll(stream: DataFrame, checkpoint_dir: str,
                         group_cols: tuple[str, ...] = ("event_type",)):
     """Attach the register-maintenance sink to a stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        register_batch(batch_df, batch_id, index_dir, key_col, group_cols)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        register_batch(df, bid, index_dir, key_col, group_cols)))
 
 
 def compact_hll_index(spark, index_dir: str, through: int) -> dict:
     """Sketch-aware compaction: registers FOLD by per-(group, idx) max
     during consolidation, so the compacted store holds one row per
     register instead of one per (register, batch) — the consolidated
-    size is independent of how many batches were folded.  Correctness
-    is the same associativity the serve path relies on; the manifest /
-    GC / replay-guard mechanics are compaction.compact_index's."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c not in ("idx", "mx")]
-        return live.groupBy(*grp, "idx").agg(F.max("mx").alias("mx"))
-
+    size is independent of how many batches were folded."""
     return compact_index(spark, _regs_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

@@ -22,11 +22,9 @@ overlap matrix between groups (the streaming face of the exact
 of exact fingerprint intersections, O(#groups) state instead of
 O(#fingerprints)).
 
-Exactly-once story as every sibling: a delta depends only on its own
-batch, lands in its own ``batch_id=N`` partition via dynamic partition
-overwrite, and a crash-retried batch overwrites itself bit-identically
-— and even a NON-overwritten duplicate would be absorbed by the
-min-fold.  Compaction folds deltas to one row per group.
+Exactly-once is the delta-log contract in ``compaction.py`` — and
+even a NON-overwritten duplicate would be absorbed by the min-fold.
+Compaction folds deltas to one row per group.
 """
 
 from __future__ import annotations
@@ -37,12 +35,20 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.similarity import N_MINHASH
 from ..plans.textops import tokens_col
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 _SIG_COLS = [f"m{s}" for s in range(N_MINHASH)]
 
 
 def _sigs_path(index_dir: str) -> str:
     return os.path.join(index_dir, "sigs")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-group signature minimum — idempotent."""
+    grp = [c for c in live.columns if c not in _SIG_COLS]
+    return live.groupBy(*grp).agg(*[F.min(c).alias(c) for c in _SIG_COLS])
 
 
 def group_minhash_sigs(docs: DataFrame, group_col: str = "source",
@@ -75,26 +81,16 @@ def minhash_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
                   group_col: str = "source") -> None:
     """One micro-batch of signature maintenance (the foreachBatch
     body): one 16-hash row per group seen in the batch."""
-    (group_minhash_sigs(batch_df, group_col)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_sigs_path(index_dir)))
+    write_delta(group_minhash_sigs(batch_df, group_col), batch_id,
+                _sigs_path(index_dir))
 
 
 def read_group_sigs(spark, index_dir: str,
                     group_col: str = "source") -> DataFrame:
     """Fold the signature deltas by MIN — equal to the batch signature
     over the ingested union."""
-    from .neardup import _read_index
-
-    sigs = _read_index(spark, _sigs_path(index_dir),
-                       [group_col, *_SIG_COLS])
-    if sigs is None:
-        raise FileNotFoundError(f"no sig index at {_sigs_path(index_dir)}")
-    return sigs.groupBy(group_col).agg(
-        *[F.min(c).alias(c) for c in _SIG_COLS])
+    return read_state(spark, _sigs_path(index_dir), lambda live: _fold(
+        live.select(group_col, *_SIG_COLS)))
 
 
 def read_overlap(spark, index_dir: str,
@@ -122,25 +118,11 @@ def run_incremental_minhash(stream: DataFrame, checkpoint_dir: str,
                             index_dir: str, **kwargs):
     """Attach the signature sink to a document stream and drain
     available input."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        minhash_batch(batch_df, batch_id, index_dir, **kwargs)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        minhash_batch(df, bid, index_dir, **kwargs)))
 
 
 def compact_minhash_index(spark, index_dir: str, through: int) -> dict:
     """Min-fold compaction: deltas collapse to one row per group."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c not in _SIG_COLS]
-        return live.groupBy(*grp).agg(
-            *[F.min(c).alias(c) for c in _SIG_COLS])
-
     return compact_index(spark, _sigs_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

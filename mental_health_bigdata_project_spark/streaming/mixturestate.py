@@ -17,10 +17,8 @@ SUM over frozen buckets, the conformal monitor by SUM — this merges
 vocabulary counts by SUM.  State is the Zipf-bounded (lang, word)
 relation (vocabulary-sized, like the BM25 postings — larger than the
 sketch members but sublinear in stream volume); exactly-once is the
-family's standard: deltas depend only on their own batch (no
-prior-state read), a crash-retried batch rewrites its own partition
-with identical rows, and ``compact_mixture_state`` sum-folds the log
-back to one row per (lang, word).
+delta-log contract in ``compaction.py``, and ``compact_mixture_state``
+sum-folds the log back to one row per (lang, word).
 
 Why a pipeline wants it live: DoReMi weights drive the sampler of a
 continuously-refreshed training mixture — a source whose distribution
@@ -36,10 +34,18 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.textops import doremi_from_counts, tokens_col
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 
 def _counts_path(index_dir: str) -> str:
     return os.path.join(index_dir, "mixture_counts")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-(lang, word) count sums."""
+    return live.groupBy("lang", "w").agg(
+        F.sum("c").cast("bigint").alias("c"))
 
 
 def mixture_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -52,22 +58,14 @@ def mixture_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
                      F.explode(tokens_col(text_col)).alias("w"))
              .groupBy("lang", "w")
              .agg(F.count("*").cast("bigint").alias("c")))
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_counts_path(index_dir)))
+    write_delta(delta, batch_id, _counts_path(index_dir))
 
 
 def serve_weights(spark: SparkSession, index_dir: str) -> DataFrame:
     """(lang, n_tokens, token_share, excess_loss, doremi_weight) over
     everything ingested so far — the same columns, same algebra, same
     rounding as the oracle-green batch query."""
-    from .compaction import read_live
-
-    folded = (read_live(spark, _counts_path(index_dir))
-              .groupBy("lang", "w")
-              .agg(F.sum("c").cast("bigint").alias("c"))
+    folded = (read_state(spark, _counts_path(index_dir), _fold)
               .localCheckpoint(eager=True))    # feeds nd/gw/tot/kl
     return doremi_from_counts(folded)
 
@@ -76,23 +74,12 @@ def compact_mixture_state(spark: SparkSession, index_dir: str,
                           through: int) -> dict:
     """Sum-fold the per-batch count deltas — state stays one row per
     live (lang, word) regardless of stream age."""
-    from .compaction import compact_index
-
-    return compact_index(
-        spark, _counts_path(index_dir), through,
-        transform=lambda live: live.groupBy("lang", "w")
-        .agg(F.sum("c").cast("bigint").alias("c")))
+    return compact_index(spark, _counts_path(index_dir), through,
+                         transform=_fold)
 
 
 def run_mixture_monitor(stream: DataFrame, checkpoint_dir: str,
                         index_dir: str):
     """Attach the mixture sink to a documents stream (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        mixture_batch(batch_df, batch_id, index_dir)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        mixture_batch(df, bid, index_dir)))

@@ -12,12 +12,9 @@ batch oracle gate value-checks, so streaming == batch holds by
 construction (moment addition is exact and associative) and is pinned
 by test.
 
-Same exactly-once story as hllcount.py: a delta depends only on its
-own batch (no prior-state read, no ``before_batch`` pruning), lands in
-its own ``batch_id=N`` partition via dynamic partition overwrite, and
-a crash-retried batch overwrites itself bit-identically.  Compaction
-folds deltas by summation (``compact_moment_index``), so the store
-holds one row per group regardless of batch count.
+Exactly-once is the delta-log contract in ``compaction.py``.
+Compaction folds deltas by summation (``compact_moment_index``), so
+the store holds one row per group regardless of batch count.
 
 This is how every "train a linear probe / monitor a drift slope over
 an unbounded stream" job should look at 100 TB: state is six decimals
@@ -34,12 +31,21 @@ from pyspark.sql import DataFrame, functions as F
 from ..plans.sketches import (
     LINREG_MOMS as _MOMS, LINREG_X_EXPR, LINREG_Y_EXPR, linreg_fit,
     linreg_moments)
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
 
 _DEC = "decimal(38,0)"
 
 
 def _moments_path(index_dir: str) -> str:
     return os.path.join(index_dir, "moments")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-group moment sums — exact DECIMAL addition."""
+    grp = [c for c in live.columns if c not in _MOMS]
+    return live.groupBy(*grp).agg(
+        *[F.sum(c).cast(_DEC).alias(c) for c in _MOMS])
 
 
 def moments_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -50,12 +56,8 @@ def moments_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     callable directly for tests / backfills).  The moment expressions
     are plans/sketches.linreg_moments — the SAME aggregation the batch
     oracle gate value-checks."""
-    (linreg_moments(batch_df, group_col, x_expr, y_expr)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_moments_path(index_dir)))
+    write_delta(linreg_moments(batch_df, group_col, x_expr, y_expr),
+                batch_id, _moments_path(index_dir))
 
 
 def read_linreg(spark, index_dir: str,
@@ -63,15 +65,8 @@ def read_linreg(spark, index_dir: str,
     """Serve (group, n, slope, intercept, r2) from the summed moment
     deltas — byte-identical to ml_linreg_closed_form on the union of
     all ingested rows because moment addition is exact."""
-    from .neardup import _read_index
-
-    moms = _read_index(spark, _moments_path(index_dir),
-                       [group_col, *_MOMS])
-    if moms is None:
-        raise FileNotFoundError(
-            f"no moment index at {_moments_path(index_dir)}")
-    m = moms.groupBy(group_col).agg(
-        *[F.sum(c).cast(_DEC).alias(c) for c in _MOMS])
+    m = read_state(spark, _moments_path(index_dir),
+                   lambda live: _fold(live.select(group_col, *_MOMS)))
     # the fit is plans/sketches.linreg_fit — serve-time coefficients
     # can never drift from the oracle-checked batch query's
     return linreg_fit(m, group_col)
@@ -81,26 +76,11 @@ def run_incremental_moments(stream: DataFrame, checkpoint_dir: str,
                             index_dir: str, **kwargs):
     """Attach the moment-maintenance sink to a stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        moments_batch(batch_df, batch_id, index_dir, **kwargs)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        moments_batch(df, bid, index_dir, **kwargs)))
 
 
 def compact_moment_index(spark, index_dir: str, through: int) -> dict:
-    """Sum-fold compaction: deltas collapse to one row per group (the
-    hllcount.compact_hll_index recipe with addition instead of max)."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c not in _MOMS]
-        return live.groupBy(*grp).agg(
-            *[F.sum(c).cast(_DEC).alias(c) for c in _MOMS])
-
+    """Sum-fold compaction: deltas collapse to one row per group."""
     return compact_index(spark, _moments_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

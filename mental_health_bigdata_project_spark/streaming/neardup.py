@@ -18,9 +18,8 @@ Design (foreachBatch + a persisted band-key index, NOT per-row state):
   shuffle hash join on the key — no all-pairs, no growing driver state
   (the reference's `seen_ids` set, fixed).
 - Exactly-once on replay: both the accepted-docs output and the index
-  delta land in `batch_id=N` partitions via dynamic partition
-  overwrite, so a retried batch overwrites its own partitions instead
-  of appending duplicates (same recipe as pipeline.run_to_parquet).
+  delta are ``batch_id=N`` deltas, and the prior-index read prunes
+  ``batch_id < N`` (the delta-log contract in ``compaction.py``).
 
 Within-batch semantics are the standard LSH keep-min rule: for every
 band bucket the lowest doc id wins, and a doc is dropped if ANY of its
@@ -37,55 +36,11 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.similarity import portable_band_keys
+from .compaction import read_index, run_available_now, write_delta
 
 
 def _index_path(index_dir: str) -> str:
     return os.path.join(index_dir, "bands")
-
-
-def _read_index(spark, path: str, cols, before_batch: int | None = None):
-    """Read a persisted index, returning None ONLY when the path does
-    not exist yet (first batch).  Any other failure — corrupt footer,
-    filesystem error, permissions — must raise and fail the batch so
-    the checkpoint retries it; swallowing it would silently disable
-    dedup for the batch and leak duplicates permanently.
-
-    ``before_batch`` is REQUIRED for exactly-once replay: a crash-
-    retried micro-batch N finds its own ``batch_id=N`` delta already
-    committed, and without ``batch_id < N`` partition pruning it would
-    treat its own fingerprints as prior duplicates and overwrite its
-    accepted partition with gutted output.  Pass the current batch_id;
-    the filter is a partition-pruned read, not a scan.
-
-    Compaction-aware (streaming/compaction.py): when a manifest is
-    present the view is compacted ∪ newer deltas, and replaying a
-    batch at or below the compaction horizon raises — its delta is
-    gone and its rows carry the horizon's batch_id, so the replay
-    would silently see an empty prior index and leak duplicates."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import load_manifest, read_live
-    manifest = load_manifest(path)
-    if manifest is not None and before_batch is not None \
-            and before_batch <= manifest["through"]:
-        raise ValueError(
-            f"batch {before_batch} is at or below the compaction "
-            f"horizon {manifest['through']} of {path}; compact only "
-            f"through checkpoint-committed batches")
-    try:
-        df = read_live(spark, path)
-    except AnalysisException as e:
-        msg = str(e)
-        # missing path, or a directory a killed first write created but
-        # committed nothing into (only _temporary) — both mean "no index
-        # yet"; anything else (corrupt files, permissions) re-raises
-        if ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg):
-            return None
-        raise
-    if before_batch is not None:
-        df = df.filter(F.col("batch_id") < F.lit(before_batch))
-    return df.select(*cols)
 
 
 def dedup_batch_against_index(batch_df: DataFrame, batch_id: int,
@@ -111,7 +66,7 @@ def dedup_batch_against_index(batch_df: DataFrame, batch_id: int,
                 .join(bands.select(id_col).distinct(), id_col, "left_anti"))
 
     idx = _index_path(index_dir)
-    seen = _read_index(spark, idx, ["band_key"], before_batch=batch_id)
+    seen = read_index(spark, idx, ["band_key"], before_batch=batch_id)
     seen = seen.distinct() if seen is not None else None
 
     # drop docs colliding with any previously-accepted band.  The index
@@ -140,19 +95,9 @@ def dedup_batch_against_index(batch_df: DataFrame, batch_id: int,
     kept_ids = (kept_bands.select(id_col).distinct()
                 .unionByName(bandless))
 
-    accepted = batch_df.join(kept_ids, id_col, "left_semi")
-    (accepted.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(out_dir, "accepted")))
-    (kept_bands.select("band_key")
-     .distinct()
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(idx))
+    write_delta(batch_df.join(kept_ids, id_col, "left_semi"), batch_id,
+                os.path.join(out_dir, "accepted"))
+    write_delta(kept_bands.select("band_key").distinct(), batch_id, idx)
 
 
 N_VEC_BUCKETS = 16      # fixed partition-dir count of the vector index
@@ -187,12 +132,12 @@ def _read_vector_index(spark, idx: str, batch_id: int):
 
     cols = [F.col("cell").alias("_icell"), F.col("_iemb")]
     try:
-        return (_read_index(spark, idx, cols + [F.col("bucket")],
-                            before_batch=batch_id), False)
+        return (read_index(spark, idx, cols + [F.col("bucket")],
+                           before_batch=batch_id), False)
     except AnalysisException as e:
         if not _is_missing_bucket(e):
             raise
-    legacy = _read_index(spark, idx, cols, before_batch=batch_id)
+    legacy = read_index(spark, idx, cols, before_batch=batch_id)
     if legacy is not None:
         legacy = legacy.withColumn("bucket", _vec_bucket(F.col("_icell")))
     return legacy, True
@@ -272,33 +217,22 @@ def dedup_embeddings_against_index(batch_df: DataFrame, batch_id: int,
     # the setsim twin already pins its `kept`)
     kept = b.join(losers, id_col, "left_anti").localCheckpoint(eager=True)
 
-    (kept.select(id_col, vec_col)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(out_dir, "accepted")))
+    write_delta(kept.select(id_col, vec_col), batch_id,
+                os.path.join(out_dir, "accepted"))
     # fixed-bucket delta layout (r10 round 2; see _vec_bucket): cluster
     # by bucket so each of the <= N_VEC_BUCKETS dirs gets one file per
     # batch (guide §6 small-files), and the dynamic-overwrite commit
     # touches a BOUNDED dir count instead of one dir per cell.  A
     # LEGACY (cell, batch_id) store keeps receiving legacy-layout
     # deltas — mixing partition-column lists breaks the root read.
-    delta = (kept.select("cell", F.col("_emb").alias("_iemb"))
-             .withColumn("batch_id", F.lit(batch_id)))
+    delta = kept.select("cell", F.col("_emb").alias("_iemb"))
     if legacy_layout:
-        (delta.repartition("cell")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("cell", "batch_id")
-         .parquet(idx))
+        write_delta(delta.repartition("cell"), batch_id, idx,
+                    partition_by=("cell", "batch_id"))
     else:
-        (delta.withColumn("bucket", _vec_bucket(F.col("cell")))
-         .repartition("bucket")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "bucket")
-         .parquet(idx))
+        write_delta(delta.withColumn("bucket", _vec_bucket(F.col("cell")))
+                    .repartition("bucket"), batch_id, idx,
+                    partition_by=("batch_id", "bucket"))
 
 
 def run_incremental_near_dedup(stream: DataFrame, out_dir: str,
@@ -308,12 +242,6 @@ def run_incremental_near_dedup(stream: DataFrame, out_dir: str,
     """Attach the incremental near-dedup sink to a document stream and
     drain available input (availableNow)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch_against_index(batch_df, batch_id, out_dir, index_dir,
-                                  id_col, text_col)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        dedup_batch_against_index(df, bid, out_dir, index_dir, id_col,
+                                  text_col)))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..pipeline import enrich_posts
 from ..schemas import POST_SCHEMA
+from .compaction import write_delta
 
 
 def read_posts_json_stream(spark: SparkSession, in_dir: str) -> DataFrame:
@@ -37,19 +38,13 @@ def write_batch(batch_df: DataFrame, batch_id: int, out_dir: str,
                 latest_n: int | None = None) -> None:
     """The ``run_to_parquet`` foreachBatch body.
 
-    Exactly-once on replay: each micro-batch lands in its own
-    ``batch_id=N`` partition of ``all`` via dynamic partition
-    overwrite, so a batch retried after a partial write (worker crash
-    between write and checkpoint commit) overwrites ITS OWN partition
-    instead of appending duplicates — a plain mode("append") here is
-    only at-least-once."""
-    (
-        batch_df.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(f"{out_dir}/all")
-    )
+    Exactly-once on replay: each micro-batch is a ``batch_id=N`` delta
+    of ``all`` (the delta-log contract in ``compaction.py``), so a
+    batch retried after a partial write (worker crash between write
+    and checkpoint commit) overwrites ITS OWN partition instead of
+    appending duplicates — a plain mode("append") here is only
+    at-least-once."""
+    write_delta(batch_df, batch_id, f"{out_dir}/all")
     if latest_n:
         _refresh_latest(batch_df, batch_id, out_dir, latest_n)
 

@@ -49,10 +49,9 @@ Design (foreachBatch + two persisted index tables, NOT per-row state):
   note).  Upstream dedup_by_id / CDC upsert topologies are the
   uniqueness layer.
 - **Exactly-once on replay**: accepted output and both index deltas
-  land in ``batch_id=N`` partitions via dynamic partition overwrite,
-  and every index read prunes ``batch_id < N`` (``_read_index``'s
-  before_batch) so a crash-retried batch never sees its own delta
-  (the round-4 replay fix class).
+  are ``batch_id=N`` deltas, and every index read prunes
+  ``batch_id < N`` (``read_index``'s before_batch) — the delta-log
+  contract in ``compaction.py``.
 
 Within-batch semantics are greedy keep-min: a doc is dropped if any
 verified duplicate pair links it to a lower doc_id (or to any prior
@@ -63,13 +62,18 @@ chains via dedup_cluster_components.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import (setsim_candidates_between, setsim_prefix_rows,
                              setsim_shingles, setsim_verify_pairs, tokens_col)
-from .neardup import _read_index
+from .compaction import (_check_through, _read_deltas, compact_index,
+                         load_manifest, read_index, read_live,
+                         run_available_now, write_delta)
 
 _T = 0.5
 N_BUCKETS = 16          # shingle-hash partitions of the prefix index
@@ -98,8 +102,6 @@ def _load_dforder(spark, index_dir: str) -> DataFrame | None:
     lives in the prefix store's compaction manifest (``dforder_dir``),
     committed atomically with the re-sorted prefix rows — a reader can
     never observe the order and the store separately."""
-    from .compaction import load_manifest
-
     m = load_manifest(_prefix_path(index_dir))
     if not m or "dforder_dir" not in m:
         return None
@@ -189,18 +191,14 @@ def _read_prefix_index(spark, index_dir: str, batch_id: int):
     compacted dir alongside bucket-less deltas, and ``read_live``'s
     ``comp.unionByName(deltas.select(*comp.columns))`` fails on the
     missing column no matter which layout the caller asks for.  Going
-    through ``_read_index`` again here would re-raise that same error
+    through ``read_index`` again here would re-raise that same error
     outside this except and deterministically fail every retry of the
     batch — the exact poison pill this shim exists to prevent."""
-    from pyspark.errors import AnalysisException
-
-    from .compaction import _read_deltas, load_manifest
-
     cols = ["shingle", "doc_id", "p", "sz"]
     path = _prefix_path(index_dir)
     try:
-        return (_read_index(spark, path, cols + ["bucket"],
-                            before_batch=batch_id),
+        return (read_index(spark, path, cols + ["bucket"],
+                           before_batch=batch_id),
                 False)
     except AnalysisException as e:
         if not _is_missing_bucket(e):
@@ -208,14 +206,14 @@ def _read_prefix_index(spark, index_dir: str, batch_id: int):
     m = load_manifest(path)
     if m is None:
         # pure legacy store, no compaction yet: read_live is a plain
-        # root read here, so _read_index is safe — only the column
+        # root read here, so read_index is safe — only the column
         # list changes
-        legacy = _read_index(spark, path, cols, before_batch=batch_id)
+        legacy = read_index(spark, path, cols, before_batch=batch_id)
         return ((None if legacy is None
                  else legacy.withColumn("bucket", _bucket(F.col("shingle")))),
                 True)
     # half-migrated: bucketed compacted store + legacy deltas above the
-    # horizon.  Replicate _read_index's replay guard, then assemble the
+    # horizon.  Replicate read_index's replay guard, then assemble the
     # live view side-by-side with per-side bucket backfill.
     if batch_id <= m["through"]:
         raise ValueError(
@@ -286,24 +284,13 @@ def compact_setsim_index(spark, index_dir: str, through: int,
     it).  With surviving deltas above ``through`` (or
     ``reorder=False``) the store compacts under its CURRENT order and
     keeps its existing epoch pointer — deltas written under the old
-    order stay sound against it."""
-    from .compaction import (_batch_dirs, _batch_id_of, compact_index,
-                             load_manifest, read_live)
-
+    order stay sound against it.  ``through`` is validated against
+    BOTH tables before anything is written, so a rejected horizon
+    leaves no snapshot behind."""
     prefix_path, arrs_path = _prefix_path(index_dir), _arrs_path(index_dir)
     prev = load_manifest(prefix_path) or {}
-
-    def _newest(table_path: str) -> int | None:
-        ids = [b for b in map(_batch_id_of, _batch_dirs(table_path))
-               if b is not None]
-        m = load_manifest(table_path)
-        if m is not None:
-            ids.append(m["through"])
-        return max(ids) if ids else None
-
-    newest = [_newest(prefix_path), _newest(arrs_path)]
-    can_reorder = (reorder and all(n is not None and n <= through
-                                   for n in newest))
+    newest = [_check_through(p, through) for p in (prefix_path, arrs_path)]
+    can_reorder = reorder and all(n == through for n in newest)
     if not can_reorder:
         extra = ({"dforder_dir": prev["dforder_dir"]}
                  if "dforder_dir" in prev else None)
@@ -325,9 +312,6 @@ def compact_setsim_index(spark, index_dir: str, through: int,
         }
 
     # --- epoch re-sort path ---
-    import glob as _glob
-    import shutil as _shutil
-
     arrs_live = read_live(spark, arrs_path).filter(
         F.col("batch_id") <= F.lit(through)).select("doc_id", "arr", "sz")
     epoch_dir = f"epoch_v{prev.get('version', 0) + 1}"
@@ -357,9 +341,9 @@ def compact_setsim_index(spark, index_dir: str, through: int,
     }
     # GC superseded epoch snapshots (readers resolve only the pointer
     # committed above; a crash here leaves harmless litter)
-    for d in _glob.glob(os.path.join(_dforder_path(index_dir), "epoch_v*")):
+    for d in glob.glob(os.path.join(_dforder_path(index_dir), "epoch_v*")):
         if os.path.basename(d) != epoch_dir:
-            _shutil.rmtree(d, ignore_errors=True)
+            shutil.rmtree(d, ignore_errors=True)
     out["dforder"] = {"dir": epoch_dir}
     return out
 
@@ -390,9 +374,9 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
                .join(arrs.select("doc_id"), "doc_id", "left_anti"))
 
     prior_pre, legacy_layout = _read_prefix_index(spark, index_dir, batch_id)
-    prior_arrs = _read_index(spark, _arrs_path(index_dir),
-                             ["doc_id", "arr", "sz"],
-                             before_batch=batch_id)
+    prior_arrs = read_index(spark, _arrs_path(index_dir),
+                            ["doc_id", "arr", "sz"],
+                            before_batch=batch_id)
     # a crash between the two index writes can leave `prefix` committed
     # without `arrs` for the batch being replayed; before_batch pruning
     # already hides that delta, and requiring BOTH tables here keeps the
@@ -453,11 +437,7 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
     kept_ids = kept.select("doc_id").unionByName(setless)
     accepted = batch_df.join(
         kept_ids.withColumnRenamed("doc_id", id_col), id_col, "left_semi")
-    (accepted.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(out_dir, "accepted")))
+    write_delta(accepted, batch_id, os.path.join(out_dir, "accepted"))
     # repartition BY BUCKET before the partitioned write: without it
     # every one of the ~32 write tasks holds rows of every bucket and
     # the delta lands as 64 dirs x 32 tiny files per batch — the
@@ -467,22 +447,16 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
     # store keeps receiving legacy-layout deltas — mixing layouts
     # breaks the root read's partition discovery — until
     # compact_setsim_index migrates the whole store at once.
-    delta = (setsim_prefix_rows(kept, t)
-             .withColumn("batch_id", F.lit(batch_id)))
-    if not legacy_layout:
-        delta = (delta.withColumn("bucket", _bucket(F.col("shingle")))
-                 .repartition(F.col("bucket")))
-    (delta.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy(*(["batch_id"] if legacy_layout
-                    else ["batch_id", "bucket"]))
-     .parquet(_prefix_path(index_dir)))
-    (kept.select("doc_id", "arr", "sz")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_arrs_path(index_dir)))
+    delta = setsim_prefix_rows(kept, t)
+    if legacy_layout:
+        write_delta(delta, batch_id, _prefix_path(index_dir))
+    else:
+        write_delta(delta.withColumn("bucket", _bucket(F.col("shingle")))
+                    .repartition(F.col("bucket")), batch_id,
+                    _prefix_path(index_dir),
+                    partition_by=("batch_id", "bucket"))
+    write_delta(kept.select("doc_id", "arr", "sz"), batch_id,
+                _arrs_path(index_dir))
 
 
 def run_incremental_setsim_dedup(stream: DataFrame, out_dir: str,
@@ -493,12 +467,6 @@ def run_incremental_setsim_dedup(stream: DataFrame, out_dir: str,
     """Attach the incremental exact-setsim sink to a document stream
     and drain available input (availableNow)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_setsim_batch_against_index(batch_df, batch_id, out_dir,
-                                         index_dir, id_col, text_col, t)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        dedup_setsim_batch_against_index(df, bid, out_dir, index_dir,
+                                         id_col, text_col, t)))

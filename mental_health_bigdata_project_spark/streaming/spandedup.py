@@ -19,11 +19,9 @@ state — the streaming/chunkdedup.py recipe at gram granularity):
   index denser than the chunk index (~1 fp per token vs per 30); real
   deployments drop it into a bloom filter — the probe below is already
   the hash-join shape a bloom pushdown accelerates.
-- Exactly-once on replay: accepted output and the index delta land in
-  `batch_id=N` partitions via dynamic partition overwrite, so a
-  retried batch overwrites its own partitions.  The delta is the set
-  of fps FIRST seen this batch — exactly what must block future
-  batches.
+- Exactly-once on replay: the delta-log contract in
+  ``compaction.py``.  The delta is the set of fps FIRST seen this
+  batch — exactly what must block future batches.
 """
 
 from __future__ import annotations
@@ -34,6 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import (merge_spans_df, span_grams_df,
                              span_rewrite_df, span_tokens_df, _SPAN_K)
+from .compaction import read_index, run_available_now, write_delta
 
 
 def _index_path(index_dir: str) -> str:
@@ -57,9 +56,8 @@ def rewrite_spans_batch_against_index(batch_df: DataFrame, batch_id: int,
     # and the index delta — the same pin the batch _span_frames uses
     grams = span_grams_df(t).localCheckpoint(eager=True)
 
-    from .neardup import _read_index
     idx = _index_path(index_dir)
-    seen = _read_index(spark, idx, ["h"], before_batch=batch_id)
+    seen = read_index(spark, idx, ["h"], before_batch=batch_id)
     seen = seen.distinct() if seen is not None else None
 
     # windows duplicated against PRIOR batches: every occurrence is cut
@@ -85,19 +83,10 @@ def rewrite_spans_batch_against_index(batch_df: DataFrame, batch_id: int,
     spans = merge_spans_df(dupw)
     rebuilt = span_rewrite_df(t, spans)
 
-    (rebuilt.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(os.path.join(out_dir, "accepted")))
+    write_delta(rebuilt, batch_id, os.path.join(out_dir, "accepted"))
     # index delta: fps first seen this batch (novel grams, one row
     # each) — duplicates of prior batches are already indexed
-    (fresh.select("h").distinct()
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(idx))
+    write_delta(fresh.select("h").distinct(), batch_id, idx)
 
 
 def stream_span_dedup(spark, in_dir: str, out_dir: str, index_dir: str,
@@ -109,9 +98,6 @@ def stream_span_dedup(spark, in_dir: str, out_dir: str, index_dir: str,
               .schema("doc_id bigint, text string")
               .option("maxFilesPerTrigger", 1)
               .json(in_dir))
-    return (stream.writeStream
-            .foreachBatch(lambda df, bid: rewrite_spans_batch_against_index(
-                df, bid, out_dir, index_dir, gate=gate))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        rewrite_spans_batch_against_index(
+            df, bid, out_dir, index_dir, gate=gate)))

@@ -16,10 +16,9 @@ Same 100 TB design as the HLL/CMS/moments states in this package:
 - The per-batch delta is ONE state row per group regardless of batch
   row count — contrast an exact counter, whose (group, token) state
   grows with the vocabulary ever seen.
-- A delta depends only on its own batch (no read-modify-write), so a
-  crash-retried batch overwrites its own ``batch_id=N`` partition
-  bit-identically — exactly-once replay with no ``before_batch``
-  pruning.
+- A delta depends only on its own batch, so the delta-log contract in
+  ``compaction.py`` makes replay exactly-once with no
+  read-modify-write.
 - ``compact_topk_index`` folds deltas by per-group combine during
   consolidation (the sketch-aware compaction), leaving one state row
   per group independent of stream age.
@@ -31,6 +30,9 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from .compaction import (compact_index, read_state, run_available_now,
+                         write_delta)
+
 # items tracked per sketch — far above the test corpora's vocabulary,
 # so local runs sit in the exact regime; a deployment sizes this to
 # its error budget (the sketch stays KB-sized either way)
@@ -39,6 +41,14 @@ MAX_ITEMS_TRACKED = 100_000
 
 def _state_path(index_dir: str) -> str:
     return os.path.join(index_dir, "topk_state")
+
+
+def _fold(live: DataFrame) -> DataFrame:
+    """Per-group sketch combine."""
+    grp = [c for c in live.columns if c != "st"]
+    return live.groupBy(*grp).agg(
+        F.expr(f"approx_top_k_combine(st, {MAX_ITEMS_TRACKED})")
+        .alias("st"))
 
 
 def accumulate_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
@@ -51,31 +61,21 @@ def accumulate_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     delta = (batch_df.groupBy(*group_cols)
              .agg(F.expr(f"approx_top_k_accumulate({item_col}, "
                          f"{MAX_ITEMS_TRACKED})").alias("st")))
-    (delta.withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id")
-     .parquet(_state_path(index_dir)))
+    write_delta(delta, batch_id, _state_path(index_dir))
 
 
 def read_topk(spark, index_dir: str, k: int = 20,
               group_cols: tuple[str, ...] = ("source",),
               overall: bool = True) -> DataFrame:
-    """Serve the top-k: combine every delta's state (and, when
-    ``overall``, across groups too — the rollup never re-reads the
-    stream), then estimate.  Output: (rnk, item, n) with rnk following
-    counts."""
-    from .neardup import _read_index
-
-    st = _read_index(spark, _state_path(index_dir), [*group_cols, "st"])
-    if st is None:
-        raise FileNotFoundError(
-            f"no top-k state index at {_state_path(index_dir)}")
-    agg = st if overall else st.groupBy(*group_cols)
-    merged = agg.agg(
-        F.expr(f"approx_top_k_estimate(approx_top_k_combine(st), {k})")
-        .alias("tk"))
+    """Serve the top-k: combine every delta's state per group (and,
+    when ``overall``, across groups too — the rollup never re-reads
+    the stream), then estimate.  Output: (rnk, item, n) with rnk
+    following counts."""
     keep = [] if overall else list(group_cols)
+    st = read_state(spark, _state_path(index_dir),
+                    lambda live: _fold(live.select(*keep, "st")))
+    merged = st.select(
+        *keep, F.expr(f"approx_top_k_estimate(st, {k})").alias("tk"))
     return (merged.select(*keep, F.posexplode("tk").alias("pos", "e"))
             .select(*keep, (F.col("pos") + 1).cast("int").alias("rnk"),
                     F.col("e.item").alias("item"),
@@ -87,31 +87,13 @@ def run_incremental_topk(stream: DataFrame, checkpoint_dir: str,
                          group_cols: tuple[str, ...] = ("source",)):
     """Attach the state-maintenance sink to a stream and drain
     available input (availableNow)."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        accumulate_batch(batch_df, batch_id, index_dir, item_col,
-                         group_cols)
-
-    return (stream.writeStream
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        accumulate_batch(df, bid, index_dir, item_col, group_cols)))
 
 
 def compact_topk_index(spark, index_dir: str, through: int) -> dict:
     """Sketch-aware compaction: states FOLD by per-group combine during
     consolidation, so the compacted store holds one state row per group
-    independent of how many batches were folded.  Correctness is the
-    same associativity the serve path relies on; manifest / GC /
-    replay-guard mechanics are compaction.compact_index's."""
-    from .compaction import compact_index
-
-    def fold(live: DataFrame) -> DataFrame:
-        grp = [c for c in live.columns if c != "st"]
-        return live.groupBy(*grp).agg(
-            F.expr(f"approx_top_k_combine(st, {MAX_ITEMS_TRACKED})")
-            .alias("st"))
-
+    independent of how many batches were folded."""
     return compact_index(spark, _state_path(index_dir), through,
-                         transform=fold)
+                         transform=_fold)

@@ -28,7 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from .neardup import _read_index
+from .compaction import read_index, run_available_now
 
 N_BUCKETS = 16
 
@@ -73,7 +73,7 @@ def upsert_batch(batch_df: DataFrame, batch_id: int, state_dir: str,
     # checkpoint retries the batch — treating it as empty state would
     # make the dynamic overwrite below silently drop every key in the
     # touched buckets that isn't in this batch
-    state = _read_index(spark, path, ["*"])
+    state = read_index(spark, path, ["*"])
     if state is not None:
         # partition-pruned read of ONLY the touched buckets
         state = state.filter(F.col("bucket").isin(touched))
@@ -121,14 +121,10 @@ def stream_keyed_upsert(spark, in_dir: str, state_dir: str,
                       "op string, value double")
               .option("maxFilesPerTrigger", 1)
               .json(in_dir))
-    return (stream.writeStream
-            .foreachBatch(lambda df, bid: upsert_batch(
-                df, bid, state_dir, key=key))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
+        upsert_batch(df, bid, state_dir, key=key)))
 
 
 def read_state(spark, state_dir: str) -> DataFrame | None:
-    state = _read_index(spark, _state_path(state_dir), ["*"])
+    state = read_index(spark, _state_path(state_dir), ["*"])
     return state.drop("bucket") if state is not None else None

@@ -84,9 +84,9 @@ def main() -> None:
         cand = setsim_candidates_between(
             pre.hint("shuffle_hash"), prior_pre, F.lit(True), S._T) \
             .localCheckpoint(eager=True)
-        prior_arrs = S._read_index(spark, S._arrs_path(idx),
-                                   ["doc_id", "arr", "sz"],
-                                   before_batch=batch_id)
+        prior_arrs = S.read_index(spark, S._arrs_path(idx),
+                                  ["doc_id", "arr", "sz"],
+                                  before_batch=batch_id)
         dups = setsim_verify_pairs(cand, arrs, prior_arrs, S._T) \
             .select("doc_a").distinct().count()
         return {"candidates": cand.count(), "dup_docs": dups,

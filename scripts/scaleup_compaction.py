@@ -97,9 +97,9 @@ def bench_vectors(spark, sf_dir: str, root: str, n_batches: int) -> dict:
 
     from mental_health_bigdata_project_spark.sources import load_table
     from mental_health_bigdata_project_spark.streaming.compaction import (
-        compact_vector_index)
+        compact_vector_index, read_index as _read_index)
     from mental_health_bigdata_project_spark.streaming.neardup import (
-        _read_index, dedup_embeddings_against_index)
+        dedup_embeddings_against_index)
 
     vecs = load_table(spark, sf_dir, "embeddings") \
         .select("vec_id", "embedding")

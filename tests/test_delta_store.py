@@ -1,0 +1,167 @@
+"""Fast tier for the shared streaming delta log (streaming/compaction.py):
+every mergeable-state member serves through ``read_state`` and compacts
+with the same fold, on ~10-row static batches, no streaming query.
+The parity/end-to-end twins per member live in the slow-tier
+test_streaming_*.py / test_*_monitor.py files."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+import pytest
+
+from mental_health_bigdata_project_spark.streaming import (
+    bootstrapstate, calibmonitor, cmsstate, conformalmonitor, driftgate,
+    histstate, hllcount, minhashstate, mixturestate, momentstate,
+    setsimdedup, topkstate)
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STREAMING = os.path.join(ROOT, "mental_health_bigdata_project_spark",
+                         "streaming")
+
+# serve call per member: (spark, index_dir, artifact_dir) -> DataFrame
+SERVES = {
+    "hll": lambda s, d, a: hllcount.read_distinct_estimates(s, d),
+    "moments": lambda s, d, a: momentstate.read_linreg(s, d),
+    "hist": lambda s, d, a: histstate.read_quantiles(s, d),
+    "cms": lambda s, d, a: cmsstate.read_estimates(s, d, ["a"]),
+    "topk": lambda s, d, a: topkstate.read_topk(s, d),
+    "bootstrap": lambda s, d, a: bootstrapstate.read_bootstrap_ci(s, d),
+    "mixture": lambda s, d, a: mixturestate.serve_weights(s, d),
+    "minhash": lambda s, d, a: minhashstate.read_group_sigs(s, d),
+    "drift": lambda s, d, a: driftgate.serve_psi(s, a, d),
+    "conformal": lambda s, d, a: conformalmonitor.serve_coverage(s, a, d),
+    "calib": lambda s, d, a: calibmonitor.serve_calibration(s, d),
+}
+# each member's store subdirectory under index_dir
+SUBDIRS = ["hll_regs", "moments", "hdr_hist", "cms", "topk_state", "boot",
+           "mixture_counts", "sigs", "buckets", "coverage", "calib_bins"]
+
+
+@pytest.mark.parametrize("killed_first_write", [False, True])
+@pytest.mark.parametrize("member", sorted(SERVES))
+def test_serve_before_first_batch_raises_file_not_found(
+        spark, tmp_path, member, killed_first_write):
+    """No store, or a store dir a killed first write left holding only
+    ``_temporary``: every member raises FileNotFoundError, not a raw
+    AnalysisException."""
+    idx = str(tmp_path / "idx")
+    if killed_first_write:
+        for sub in SUBDIRS:
+            os.makedirs(os.path.join(idx, sub, "_temporary", "0"))
+    with pytest.raises(FileNotFoundError):
+        SERVES[member](spark, idx, str(tmp_path / "art"))
+
+
+def _conformal_model(spark, art):
+    spark.createDataFrame(
+        [("a", 5.0, 10, 10, 150, 200), ("b", 2.0, 10, 10, 80, 200)],
+        "grp string, mean_tr double, n_train bigint, n_cal bigint, "
+        "qhat_cell bigint, qhat_marginal bigint",
+    ).write.parquet(os.path.join(art, "model"))
+
+
+# one member per combine kind: (ingest(batch_df, batch_id, index_dir,
+# artifact_dir), compact(spark, index_dir, through), serve, schema,
+# the two ~10-row batches)
+KINDS = {
+    "max": (lambda df, b, d, a: hllcount.register_batch(df, b, d),
+            hllcount.compact_hll_index,
+            SERVES["hll"], "user_id bigint, event_type string",
+            [[(i, "view" if i % 3 else "click") for i in range(10)],
+             [(i, "view" if i % 2 else "cart") for i in range(6, 16)]]),
+    "decimal_sum": (lambda df, b, d, a: momentstate.moments_batch(df, b, d),
+                    momentstate.compact_moment_index, SERVES["moments"],
+                    "l_returnflag string, l_quantity double, "
+                    "l_extendedprice double",
+                    [[("AR"[i % 2], float(i + 1), 10.5 * i + 3)
+                      for i in range(10)],
+                     [("AR"[i % 2], float(2 * i), 7.25 * i + 1)
+                      for i in range(10)]]),
+    "min": (lambda df, b, d, a: minhashstate.minhash_batch(df, b, d),
+            minhashstate.compact_minhash_index, SERVES["minhash"],
+            "source string, text string",
+            [[("web" if i % 2 else "code", f"w{i} w{i + 1} w{i + 2} w{i + 3}")
+              for i in range(10)],
+             [("web" if i % 3 else "code", f"w{i} w{i + 2} w{i + 4} w{i + 6}")
+              for i in range(10)]]),
+    # distinct totals (a 6, b 5, d 4, c 1) so ranks have no ties
+    "sketch": (lambda df, b, d, a: topkstate.accumulate_batch(df, b, d),
+               topkstate.compact_topk_index, SERVES["topk"],
+               "source string, token string",
+               [[("s", t) for t in "aaaaabbbc"] + [("x", "d")],
+                [("s", t) for t in "abbddd"]]),
+    "basis": (lambda df, b, d, a: conformalmonitor.coverage_batch(
+                  df, b, d, a),
+              conformalmonitor.compact_coverage_state, SERVES["conformal"],
+              "event_type string, value double",
+              [[("ab"[i % 2], 0.7 * i) for i in range(10)],
+               [("ab"[i % 2], 1.9 * i - 3) for i in range(10)] +
+               [("a", None)]]),
+}
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_replay_and_compaction_leave_served_state_unchanged(
+        spark, tmp_path, kind):
+    ingest, compact, serve, schema, batches = KINDS[kind]
+    idx, art = str(tmp_path / "idx"), str(tmp_path / "art")
+    if kind == "basis":
+        _conformal_model(spark, art)
+    dfs = [spark.createDataFrame(rows, schema) for rows in batches]
+    for b, df in enumerate(dfs):
+        ingest(df, b, idx, art)
+    want = _rows(serve(spark, idx, art))
+    assert want
+    ingest(dfs[1], 1, idx, art)          # crash-retry of batch 1
+    assert _rows(serve(spark, idx, art)) == want
+    compact(spark, idx, 0)               # compacted batch 0 + delta 1
+    assert _rows(serve(spark, idx, art)) == want
+
+
+def test_setsim_rejected_horizon_leaves_no_snapshot(spark, tmp_path):
+    """A horizon above the newest batch is refused BEFORE the epoch
+    re-sort writes its df-order snapshot."""
+    idx = str(tmp_path / "idx")
+    docs = spark.createDataFrame(
+        [(i, f"t{i} shared words in every doc x{i % 3}") for i in range(8)],
+        "doc_id bigint, text string")
+    setsimdedup.dedup_setsim_batch_against_index(
+        docs, 0, str(tmp_path / "out"), idx)
+    with pytest.raises(ValueError, match="exceeds newest live batch"):
+        setsimdedup.compact_setsim_index(spark, idx, through=1)
+    assert not glob.glob(os.path.join(idx, "dforder", "epoch_v*"))
+
+
+def _sources():
+    for sub in ("mental_health_bigdata_project_spark", "scripts", "tests",
+                "perfbench"):
+        yield from glob.glob(os.path.join(ROOT, sub, "**", "*.py"),
+                             recursive=True)
+
+
+def test_compaction_is_the_only_owner_of_the_delta_log():
+    """Delta writes and availableNow runners live in compaction.py
+    (upsert.py's bucket rewrite is not a delta log; the serving and
+    run_to_parquet runners are their own topologies), and nothing
+    imports the retired private ``neardup._read_index``."""
+    for path in glob.glob(os.path.join(STREAMING, "*.py")):
+        name = os.path.basename(path)
+        src = open(path).read()
+        if name not in ("compaction.py", "upsert.py"):
+            assert "partitionOverwriteMode" not in src, name
+        if name not in ("compaction.py", "serving.py", "pipeline.py"):
+            assert "trigger(availableNow" not in src, name
+    for path in _sources():
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.ImportFrom):
+                assert "_read_index" not in [a.name for a in node.names], \
+                    path
+            elif isinstance(node, ast.Attribute):
+                assert node.attr != "_read_index", path

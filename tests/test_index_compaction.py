@@ -132,8 +132,8 @@ def test_stale_deltas_after_manifest_are_filtered(spark, sf_dir, tmp_path):
 def test_replay_below_horizon_refuses(spark, sf_dir, tmp_path):
     """_read_index must raise for a replay at/below the compaction
     horizon instead of silently returning an empty prior view."""
-    from mental_health_bigdata_project_spark.streaming.neardup import (
-        _read_index)
+    from mental_health_bigdata_project_spark.streaming.compaction import (
+        read_index as _read_index)
     idx = str(tmp_path / "idx")
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     for b in (0, 1, 2):
