@@ -3,7 +3,9 @@
 ``entry(spark)`` runs the flagship query (SURVEY.md §7.1: the dashboard
 stats pipeline — native clean/risk enrichment + per-group aggregates)
 on sf0.001.  ``queries()`` / ``oracle_sql()`` re-export the registry in
-``mental_health_bigdata_project_spark.plans``.
+``mental_health_bigdata_project_spark.plans``.  Each query is wrapped to
+first apply the engine's session confs to the caller's session, with
+the shuffle partition count derived from its input (``session.py``).
 """
 
 from __future__ import annotations
@@ -42,56 +44,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    import os
-
     from mental_health_bigdata_project_spark.session import ensure_runtime_confs
     from mental_health_bigdata_project_spark.plans import QUERIES
 
-    # Scale-adaptive initial shuffle-partition rule (r11, VERDICT r10
-    # item 5): one shuffle partition per ~2 MB of compressed input,
-    # floor 8, capped at the core count — derived from DATA SIZE, not
-    # a constant tuned to either local mode or the cluster.  At the
-    # bench SFs this right-sizes the map side (measured at sf0.1 on 32
-    # cores: q2 1.42 -> 0.99 s, spearman 4.33 -> 3.81, every probe
-    # query improved; a flat core-count initial left 32 near-empty
-    # reduce tasks per exchange, and AQE coalescing cannot recover the
-    # map-side overhead).  At production scale input_bytes/2MB exceeds
-    # any core count, so the rule degenerates to the classic
-    # partitions≈total-cores default with AQE size-based coalescing on
-    # top.  The old sf<=0.01 override (8) is the floor case of the same
-    # rule.  Derived per sf_dir once and cached.
-    _bytes_cache: dict[str, int] = {}
-
-    def _dataset_bytes(sf_dir: str) -> int:
-        b = _bytes_cache.get(sf_dir)
-        if b is None:
-            b = 0
-            try:
-                for entry in os.scandir(sf_dir):
-                    if entry.is_file():
-                        b += entry.stat().st_size
-                    elif entry.is_dir():
-                        for dp, _, names in os.walk(entry.path):
-                            for n in names:
-                                b += os.path.getsize(os.path.join(dp, n))
-            except OSError:
-                pass
-            _bytes_cache[sf_dir] = b
-        return b
-
     def wrap(fn):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # ensure_runtime_confs resets shuffle.partitions to the
-            # core-count default on EVERY call, so the derived override
-            # below never outlives this query into a different run.
-            ensure_runtime_confs(spark)
-            cpus = os.environ.get("SPARK_GRAFT_CPUS")
-            try:
-                cap = int(cpus) if cpus else spark.sparkContext.defaultParallelism
-                parts = min(cap, max(8, _dataset_bytes(sf_dir) // (2 << 20)))
-                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            except Exception:
-                pass
+            ensure_runtime_confs(spark, sf_dir)
             return fn(spark, sf_dir)
         return run
 

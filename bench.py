@@ -224,8 +224,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
-    spark = get_spark("bench", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark("bench", master=f"local[{cpus}]")
     qs = entry_mod.queries()
 
     # Warm up the JVM once, plus each table's scan path (footer reads,

@@ -26,232 +26,3 @@ from . import quality  # noqa: F401,E402
 from . import advanced  # noqa: F401,E402
 from . import retrieval  # noqa: F401,E402
 from . import sketches  # noqa: F401,E402
-
-
-# --- driver-sample ordering (VERDICT r2 item 2 … r5 item 1) ---------------
-#
-# The driver samples the FIRST ~50 registered queries per round
-# (registration order steered all five prior samples).  Round-6
-# ordering, in priority:
-#   1. the 64 ids with no driver row in CORRECTNESS_r01 ∪ … ∪ r05
-#      (57 oracle-backed + 7 rows-only ml_*), per the r5 verdict's
-#      action item 1 — plus any query NEW this round,
-#   2. ids already driver-checked, last.
-
-# Cumulative driver coverage: keys of CORRECTNESS_r01 ∪ … ∪ r05.
-_DRIVER_CHECKED = {
-    "agg_approx_distinct", "agg_approx_percentile", "agg_arg_extremes",
-    "agg_avg_risk", "agg_cube", "agg_distinct_users", "agg_grouping_sets",
-    "agg_high_risk_count", "agg_keyword_hits", "agg_rollup_region_nation",
-    "agg_total_count", "arr_explode_outer", "arr_explode_pos",
-    "arr_explode_tokens", "arr_set_ops", "arr_tokenize", "bpe_encode_apply",
-    "bpe_train_merges", "cast_value_string", "corpus_curation_report",
-    "decontam_benchmark", "decontam_embedding_cells",
-    "decontam_fuzzy_overlap", "dedup_by_id", "dedup_chunk_exact",
-    "dedup_chunk_rewrite", "dedup_cluster_components",
-    "dedup_cluster_portable", "dedup_embedding_cells",
-    "dedup_embedding_cosine", "dedup_exact_docs",
-    "dedup_levenshtein_blocked", "dedup_minhash_near",
-    "dedup_minhash_portable", "dedup_ngram_jaccard", "dedup_semdedup",
-    "dedup_simhash", "dedup_simhash_portable", "dedup_soft_weights",
-    "dedup_substring_rewrite", "dedup_substring_spans",
-    "dedup_survivor_select", "doc_fingerprint",
-    "doc_winnowing_fingerprints", "dq_schema_drift",
-    "dsir_importance_weights", "filter_high_risk", "filter_nonempty_text",
-    "filter_risk_bucket", "flatten_struct", "graph_pagerank_tokens",
-    "groupby_collect_posts", "groupby_subreddit", "histogram_risk_buckets",
-    "join_anti", "join_asof_events", "join_broadcast_dim",
-    "join_full_outer", "join_inner_equi", "join_left_outer",
-    "join_range_theta", "join_semi", "json_extract_path",
-    "json_parse_struct", "json_serialize", "lsh_scurve_table",
-    "map_props_extract", "merge_upsert_cdc", "mine_hard_negatives",
-    "multimodal_features", "neardup_threshold_sweep", "null_default_fill",
-    "pack_sequences", "pipeline_training_data", "privacy_k_anonymity",
-    "project_processed", "q1_pricing_summary", "quality_ensemble_score",
-    "retain_last_n", "sample_mixture_weights", "sample_stratified_api",
-    "sample_temperature_mixture", "scalar_date_breadth", "scalar_date_ops",
-    "scalar_math_ops", "scalar_string_breadth", "scalar_string_ops",
-    "scalar_try_ops", "set_except", "set_intersect", "set_union_all",
-    "sim_ann_ivf", "sim_ann_ivf_portable", "sim_ann_lsh",
-    "sim_ann_lsh_portable", "sim_ann_recall_eval",
-    "sim_ann_recall_multiprobe", "sim_cosine_topk", "sim_ivfpq_batch",
-    "sim_ivfpq_recall", "sim_ivfpq_topk", "sim_pq_adc_topk",
-    "sim_sparse_tfidf_cosine", "sim_topk_batch", "sim_topk_batch_gemm",
-    "sketch_hll_rollup", "sketch_topk_langs", "sketch_topk_rollup",
-    "source_overlap_matrix", "split_leakage_audit", "split_train_val_test",
-    "stream_window_session", "stream_window_sliding",
-    "stream_window_tumbling", "text_bigram_freq", "text_bigram_lm_score",
-    "text_char_entropy", "text_char_ngram_lang_id", "text_lang_confusion",
-    "text_lang_dist", "text_lang_id", "text_pii_scrub", "text_pmi_bigrams",
-    "text_quality_score", "text_repetition_stats", "text_surprisal_score",
-    "text_tfidf", "text_token_count", "text_token_freq",
-    "text_vocab_coverage", "text_zipf_fit", "topk_recent",
-    "ts_forecast_snaive", "ts_seasonal_decompose", "vec_centroid_by_label",
-    "vec_covariance_matrix", "vec_distance_breadth", "vec_minmax_scale",
-    "vec_normalize", "vec_pq_encode", "vec_pq_residual_mse",
-    "vec_quantize_int8", "win_lag_value", "win_rank_orders_by_price",
-    "win_running_sum",
-    # round 4 (CORRECTNESS_r04.json, 50/50 green)
-    "anomaly_cusum_shift", "anomaly_mad_outliers", "assoc_rules_pairs",
-    "bpe_fertility_by_lang", "concurrency_peak",
-    "concurrency_peak_bucketed", "corpus_shard_shuffle",
-    "dedup_modality_agreement",
-    "dedup_setsim_prefix", "doc_length_survival", "dq_key_skew",
-    "dq_profile_columns", "emb_cell_balance", "er_sorted_neighborhood",
-    "ivm_agg_refresh", "layout_zorder_skipping", "lm_kneser_ney_bigram",
-    "mixture_token_budget", "ml_kmeans_lloyd_portable",
-    "ml_linreg_closed_form", "neardup_lsh_eval", "ngram_novelty_decay",
-    "quality_ppl_buckets", "quality_rule_funnel", "rank_fusion_rrf",
-    "retrieval_eval_ndcg", "sample_weighted_reservoir",
-    "sample_weighted_systematic", "sessionize_lag_gaps",
-    "sim_ann_ivf_kmeans", "sim_bm25_topk", "sim_jl_topk_recall",
-    "sim_mmr_rerank", "sketch_bloom_decontam", "sketch_cms_token_freq",
-    "sketch_hdr_merge", "sketch_hdr_quantiles", "sketch_hll_merge",
-    "sketch_hll_portable", "sketch_hll_setops", "split_group_holdout",
-    "state_duration_total", "text_gopher_rules",
-    "transform_fim", "ts_twap",
-    "vec_jl_distortion", "win_cumulative_distinct",
-    # round 5 (CORRECTNESS_r05.json, 50/50 green)
-    "cohort_retention", "histogram_equidepth", "join_asof_nearest",
-    "join_temporal_scd2", "multimodal_dedup_bytes", "q10_returned_items",
-    "q11_important_parts", "q12_ship_latency", "q13_custdist",
-    "q14_promo_share", "q15_top_supplier", "q16_supplier_variety",
-    "q17_small_qty_revenue", "q18_large_orders", "q19_disjunctive",
-    "q20_dominant_suppliers", "q21_waiting_supplier", "q22_idle_customers",
-    "q2_min_cost_supplier", "q3_shipping_priority", "q4_order_priority",
-    "q5_region_revenue", "q6_revenue_forecast", "q7_volume_shipping",
-    "q8_market_share", "q9_profit_by_nation", "recursive_date_spine",
-    "scd2_build", "sql_hint_broadcast", "sql_in_subquery",
-    "sql_lateral_topn", "sql_parameterized", "sql_pipe_aggregate",
-    "sql_session_variables", "sql_udf_len_bucket", "ts_ewma",
-    "ts_gapfill_interpolate", "ts_mom_yoy_growth", "ts_resample_ohlc",
-    "ts_rollup_two_level", "udaf_geomean_chars", "udtf_chunk_documents",
-    "udtf_unpack_props", "variant_extract", "wau_sliding_distinct",
-    "win_last_ignore_nulls", "win_moving_avg", "win_ntile_percentrank",
-    "win_range_frame", "win_ratio_to_report",
-    # round 6 (CORRECTNESS_r06.json, 50/50 green)
-    "abc_classification", "agg_bitmap_distinct", "agg_boolean",
-    "agg_grouping_id", "agg_listagg_ordered", "agg_median_exact",
-    "agg_mode_deterministic", "agg_percentile_disc", "agg_salted_skew",
-    "anomaly_rate_spike", "arr_higher_order", "assign_contiguous_ids",
-    "attribution_linear", "cogroup_asof_enrich", "collate_group_ci",
-    "dedup_containment", "dq_expectations", "events_heatmap_dow_hour",
-    "filter_quality_percentile", "freq_of_freq", "funnel_ordered_steps",
-    "gini_concentration", "graph_bfs_sql", "graph_triangle_count",
-    "grouped_iqr_arrow", "grouped_zscore_by_user",
-    "histogram_dynamic_bins", "interval_merge_overlaps",
-    "join_interval_events", "join_null_safe", "join_range_bucketed",
-    "join_salted_skew", "markov_event_transitions", "multimodal_bytes",
-    "multimodal_bytes_arrow", "overlap_matrix_users",
-    "pivot_multi_measure", "pivot_priority_by_segment",
-    "privacy_l_diversity", "rest_poll_dedup", "rfm_segmentation",
-    "sample_stratified", "sample_systematic", "seq_pattern_regex",
-    "session_path_topn", "skyline_pareto_orders", "snapshot_diff",
-    "source_rest_poll", "stat_corr_cov", "stat_crosstab",
-    # round 7 (CORRECTNESS_r07.json, 50/50 clean) — closes cumulative
-    # coverage: every id registered through r7 now has a driver row
-    "agg_theil_inequality", "dedup_bbit_minhash", "dedup_embedding_cells",
-    "dedup_embedding_cosine", "dq_benford_deviation",
-    "dq_referential_integrity", "graph_adamic_adar", "graph_hits_fixed",
-    "graph_pagerank_fixed", "graph_ppr_fixed", "graph_ppr_multi",
-    "ml_als_recommend", "ml_classify_embeddings", "ml_fpgrowth_itemsets",
-    "ml_kmeans_embeddings", "ml_minhash_lsh", "ml_pca_embeddings",
-    "ml_tfidf_hashed", "privacy_t_closeness", "sample_coreset_kcenter",
-    "sim_ann_lsh_portable", "sim_cosine_topk", "sim_ivfpq_recall_sweep",
-    "sketch_hll_native", "sketch_hll_native_merge",
-    "sketch_theta_setops_native", "sketch_topk_native",
-    "sketch_topk_native_merge", "stat_ab_srm", "stat_anova_oneway",
-    "stat_bootstrap_ci", "stat_chi_square", "stat_kendall_tau",
-    "stat_ks_two_sample", "stat_mann_whitney", "stat_regr_trend",
-    "stat_spearman_rho", "text_burstiness", "text_rake_keywords",
-    "text_readability", "text_token_count_iter", "text_ttr_mattr",
-    "transform_span_corruption", "transpose_metrics", "ts_holt_linear",
-    "unpivot_lineitem_measures", "vec_matryoshka_recall",
-    "win_sliding_median", "win_streak_islands", "winsorized_avg",
-    # round 8 (CORRECTNESS_r08.json, 50/50 clean, first all-oracle
-    # window) — the 11 ids registered new in round 8
-    "source_overlap_hll", "dq_psi_drift", "dedup_cdc_chunks",
-    "pack_sequences_pairwise", "stat_welch_ttest", "dq_mad_outliers",
-    "ml_power_iteration_portable", "dedup_cdc_rewrite",
-    "dedup_substring_spans_w50", "stat_conformal_interval",
-    "ml_logreg_newton_portable",
-    # round 9 (CORRECTNESS_r09.json, 50/50 clean, all-oracle) — the
-    # 12 ids registered new in round 9
-    "ml_logreg_newton_d", "media_decode_wav", "mixture_doremi_weights",
-    "stat_conformal_group_gap", "text_heaps_law",
-    "sample_rho_excess_loss", "stat_cuped_adjustment", "stat_power_mde",
-    "mixture_doremi_trajectory", "text_watermark_detect",
-    "text_self_bleu_adjacent", "dq_freshness_lag",
-}
-
-_MODULE_PRIORITY = [
-    "similarity", "textops", "multimodal", "quality", "advanced",
-    "stream_windows", "mllib", "grouped", "spark4", "spark4_sources",
-    "udtf_udaf", "tpch_more", "relational", "scalars", "core",
-]
-
-# Head of the round-10 sample window, in order.  Cumulative driver
-# coverage stays total (361/361 through r9), so the r10 window leads
-# with the queries REGISTERED NEW in round 10, then re-samples the
-# ids whose implementation or shared machinery changed this round
-# (media_decode_wav gained the ASCII gate + synth mask; the Newton
-# trainer was refactored behind _logreg_d_beta; sketch_bloom_decontam
-# sits on the generalized bit-fold helper; the Self-BLEU /
-# DoReMi-trajectory parents share their modules' new siblings) so the
-# driver re-certifies exactly the surface that moved; everything else
-# keeps its cumulative row.
-_CONVERTED_FRONT = [
-    # --- new in round 10, batch 3 (first-time driver rows) ---
-    "eval_auc_delong_ci", "stat_holm_bonferroni",
-    "eval_krippendorff_alpha",
-    "ts_acf_ljung_box", "stat_wilson_ci",
-    "eval_auc_pr", "ts_trend_mann_kendall",
-    "ml_platt_scaling", "stat_tost_equivalence",
-    "media_decode_wav_alaw", "media_decode_wav_adpcm",
-    "eval_auc_roc", "stat_cohens_kappa",
-    "stat_benjamini_hochberg", "privacy_dp_counts",
-    "stat_cluster_robust_se", "ml_naive_bayes", "ml_gbdt_stumps",
-    # --- new in round 10 (first-time driver rows) ---
-    "media_decode_wav_float32", "media_decode_wav_mulaw",
-    "ml_influence_logo_newton", "ml_calibration_bins",
-    "stat_brier_decomposition", "decontam_ngram13_bloom",
-    "bpe_mixture_pareto", "text_self_bleu_ring",
-    "mixture_doremi_t5", "stat_delta_method_ratio",
-    "stat_sprt_ab", "ml_influence_linreg_logo",
-    "sample_quality_budget", "text_code_detect", "text_entropy_rate",
-    "eval_pass_at_k", "eval_bradley_terry",
-    # --- round-10 adjacency: re-certify ---
-    "media_decode_wav", "ml_logreg_newton_d",
-    "ml_logreg_newton_portable", "sketch_bloom_decontam",
-    "text_self_bleu_adjacent", "mixture_doremi_trajectory",
-    "mixture_doremi_weights", "bpe_fertility_by_lang",
-    "multimodal_features", "multimodal_dedup_bytes",
-    "ml_linreg_closed_form", "stat_cuped_adjustment",
-]
-
-
-def _reorder_registries() -> None:
-    def rank(item):
-        idx, (qid, fn) = item
-        mod = fn.__module__.rsplit(".", 1)[-1]
-        mod_rank = (_MODULE_PRIORITY.index(mod)
-                    if mod in _MODULE_PRIORITY else len(_MODULE_PRIORITY))
-        front = (_CONVERTED_FRONT.index(qid)
-                 if qid in _CONVERTED_FRONT else len(_CONVERTED_FRONT))
-        return (front,
-                qid in _DRIVER_CHECKED,      # already-checked ids last
-                mod_rank,
-                qid not in ORACLES,          # oracle-backed before rows-only
-                idx)                         # stable within a module
-
-    ordered = sorted(enumerate(list(QUERIES.items())), key=rank)
-    snapshot_oracles = dict(ORACLES)
-    QUERIES.clear()
-    ORACLES.clear()
-    for _, (qid, fn) in ordered:
-        QUERIES[qid] = fn
-        if qid in snapshot_oracles:
-            ORACLES[qid] = snapshot_oracles[qid]
-
-
-_reorder_registries()

@@ -131,7 +131,6 @@ def main() -> None:
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (SparkSession.builder.master(f"local[{cpus}]")
-             .config("spark.sql.shuffle.partitions", cpus)
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")

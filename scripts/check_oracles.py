@@ -50,7 +50,7 @@ def main():
     from mental_health_bigdata_project_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
-    spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("oracle-check", master="local[8]")
     con = duckdb.connect()
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
               "lineitem", "events", "documents", "embeddings"]:

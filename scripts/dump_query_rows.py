@@ -42,7 +42,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
-    spark = get_spark("dump-rows", master="local[8]", shuffle_partitions=8)
+    spark = get_spark("dump-rows", master="local[8]")
     qs = entry_mod.queries()
     out: dict = {}
     for qid in qids:

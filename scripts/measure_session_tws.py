@@ -31,8 +31,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.streaming.sessiontws import (
         sessionize_tws, ts_micros)
 
-    spark = get_spark("measure-session-tws", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("measure-session-tws", master="local[32]")
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state."

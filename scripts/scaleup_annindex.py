@@ -50,8 +50,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.sources import load_table
     from mental_health_bigdata_project_spark.streaming import annindex
 
-    spark = get_spark("scaleup-ann", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-ann", master="local[32]")
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if factor > 1:
         n = e.count()

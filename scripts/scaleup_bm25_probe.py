@@ -118,8 +118,7 @@ def main() -> None:
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
 
     from mental_health_bigdata_project_spark.session import get_spark
-    spark = get_spark("scaleup-bm25", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-bm25", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     result = {"base": base, "factor": factor, "runs": {}}

@@ -143,8 +143,7 @@ def main() -> None:
     n_batches = int(sys.argv[2]) if len(sys.argv) > 2 else 48
 
     from mental_health_bigdata_project_spark.session import get_spark
-    spark = get_spark("scaleup-compaction", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-compaction", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     result = {"sf_dir": sf_dir}

@@ -54,8 +54,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.session import get_spark
     from scaleup_semdedup import build_scaled
 
-    spark = get_spark("scaleup-kmeans", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-kmeans", master="local[32]")
     tmp = tempfile.mkdtemp(prefix="kmeans_scale_")
     try:
         n_scaled = build_scaled(spark, base, tmp, factor)

@@ -51,8 +51,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.streaming import (
         cmsstate, histstate, hllcount, momentstate, topkstate)
 
-    spark = get_spark("scaleup-mergeable", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-mergeable", master="local[32]")
     tmp = tempfile.mkdtemp(prefix="mergeable_scale_")
     out: dict = {"sf_dir": sf_dir, "n_batches": n_batches,
                  "hll": {}, "moments": {}, "hist": {}, "cms": {},

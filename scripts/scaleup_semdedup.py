@@ -109,8 +109,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.plans.similarity import _SEM_BITS
     from mental_health_bigdata_project_spark.session import get_spark
 
-    spark = get_spark("scaleup-semdedup", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("scaleup-semdedup", master="local[32]")
     tmp = tempfile.mkdtemp(prefix="semdedup_scale_")
     try:
         n_scaled = build_scaled(spark, base, tmp, factor)

@@ -85,7 +85,6 @@ def main():
     from mental_health_bigdata_project_spark.sources import load_table
 
     spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
              .config("spark.driver.memory", "24g")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

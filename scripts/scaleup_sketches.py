@@ -68,7 +68,6 @@ def main() -> None:
     # 10x document replication explodes grams well past the 1g default
     # driver heap in local mode (see the verify recipe's round-4 note)
     spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
              .config("spark.driver.memory", "24g")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

@@ -69,7 +69,6 @@ def main() -> None:
     from mental_health_bigdata_project_spark.session import ensure_runtime_confs
 
     spark = (SparkSession.builder.master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
              .config("spark.driver.memory", "24g")
              .config("spark.ui.enabled", "false")
              .getOrCreate())

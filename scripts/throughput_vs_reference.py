@@ -59,8 +59,7 @@ def main() -> None:
         clean_text, risk_score)
     from mental_health_bigdata_project_spark.session import get_spark
 
-    spark = get_spark("throughput", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark("throughput", master="local[32]")
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
     base = [r["text"] for r in docs.select("text").collect()]
     texts = (base * (n_rows // len(base) + 1))[:n_rows]

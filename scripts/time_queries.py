@@ -1,14 +1,16 @@
-"""Targeted query timing for the r11 optimization round: bench.py's
-methodology (same session confs, scan + machinery warm-up, cold + warm
-execution through the noop sink) over just the named queries, so an
-old-vs-new comparison doesn't need two full 134-query bench runs.
+"""Targeted query timing: bench.py's methodology (same session confs,
+scan + machinery warm-up, cold + warm execution through the noop sink)
+over just the named queries, so an old-vs-new comparison doesn't need
+two full 134-query bench runs.
 
-Extends the r10 harness with:
 - $SPARK_GRAFT_EXTRA_CONFS: semicolon-separated k=v SQL confs applied
-  after session build (for config A/B experiments);
+  after session build and before every run (for config A/B
+  experiments).  The registry wrapper re-applies ``session.CONFS`` and
+  the shuffle partition count before each query, so those are varied
+  in session.py or, for the partition cap, through $SPARK_GRAFT_CPUS;
 - $SPARK_GRAFT_TIME_CPUS: local[] core count (default 32).
 
-Usage: python scripts/time_queries_r11.py <sf_dir> <qid> [qid ...]
+Usage: python scripts/time_queries.py <sf_dir> <qid> [qid ...]
 Prints one JSON line {qid: {"cold": s, "warm": s}, "_calibration": s}.
 """
 
@@ -19,8 +21,7 @@ import os
 import sys
 import time
 
-import os as _os
-sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -33,8 +34,7 @@ def main() -> None:
     from mental_health_bigdata_project_spark.session import get_spark
     import __spark_entry__ as entry_mod
 
-    spark = get_spark("time-r11", master=f"local[{cpus}]",
-                      shuffle_partitions=int(cpus))
+    spark = get_spark("time-queries", master=f"local[{cpus}]")
     extra = os.environ.get("SPARK_GRAFT_EXTRA_CONFS", "")
     applied = {}
     for kv in filter(None, extra.split(";")):
@@ -75,16 +75,13 @@ def main() -> None:
 
     out: dict = {}
     for qid in qids:
-        spark.sparkContext.setJobDescription(f"r11-time: {qid}")
+        spark.sparkContext.setJobDescription(f"time-queries: {qid}")
         fn = qs[qid]
 
         def run() -> float:
             # bench methodology: the clock covers DataFrame build AND
             # the action (queries with eager checkpoints do their work
-            # at build time).  Experiment confs are (re-)applied first
-            # — the query wrapper's ensure_runtime_confs resets
-            # shuffle.partitions on every call, so shuffle-partition
-            # experiments must ride $SPARK_GRAFT_CPUS instead.
+            # at build time).
             for k, v in applied.items():
                 spark.conf.set(k, v)
             t0 = time.perf_counter()

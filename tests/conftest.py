@@ -14,7 +14,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from mental_health_bigdata_project_spark.session import get_spark
 
-    spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    spark = get_spark("tests", master="local[4]")
     yield spark
     spark.stop()
 

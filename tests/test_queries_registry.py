@@ -274,3 +274,23 @@ def test_doc_count_claims_match_registry():
                         f"is ({n_q}, {n_o})")
 
     assert not problems, "\n".join(problems)
+
+
+def test_readme_and_architecture_counts_match_registry():
+    """README's "N queries, M with DuckDB oracle twins" and
+    ARCHITECTURE's "M of N queries" must both be present and equal the
+    registry's sizes."""
+    import os
+    import re
+
+    from mental_health_bigdata_project_spark.plans import ORACLES, QUERIES
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "README.md")) as f:
+        readme = re.search(r"(\d+) queries, (\d+) with DuckDB oracle twins",
+                           f.read())
+    with open(os.path.join(root, "ARCHITECTURE.md")) as f:
+        arch = re.search(r"(\d+) of (\d+) queries", f.read())
+    assert readme and arch
+    assert (int(readme[1]), int(readme[2])) == (len(QUERIES), len(ORACLES))
+    assert (int(arch[2]), int(arch[1])) == (len(QUERIES), len(ORACLES))

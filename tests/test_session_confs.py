@@ -1,0 +1,105 @@
+"""Session configuration has one owner, ``session.py``: the conf table,
+the core count (read at call time) and the data-derived shuffle
+partition rule.  Every case runs on ``spark.newSession()`` so the shared
+fixture's confs stay untouched."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+import pytest
+
+import __spark_entry__ as entry_mod
+from mental_health_bigdata_project_spark.session import (
+    CONFS, ensure_runtime_confs)
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = os.path.join(ROOT, "mental_health_bigdata_project_spark")
+SESSION_PY = os.path.join(PACKAGE, "session.py")
+PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def test_core_count_read_at_call_time(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    s = ensure_runtime_confs(spark.newSession())
+    assert s.conf.get(PARTITIONS) == "3"
+
+
+def test_core_count_defaults_to_parallelism(spark, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    s = ensure_runtime_confs(spark.newSession())
+    assert s.conf.get(PARTITIONS) == str(
+        spark.sparkContext.defaultParallelism)
+
+
+def test_runtime_confs_restore_every_table_entry(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    expected = {**CONFS, PARTITIONS: "3"}
+    perturbed = {k: ("false" if v == "true" else "America/New_York")
+                 for k, v in CONFS.items()}
+    perturbed[PARTITIONS] = "200"
+    s = spark.newSession()
+    for k, bad in perturbed.items():
+        s.conf.set(k, bad)
+        assert s.conf.get(k) == bad
+        ensure_runtime_confs(s)
+        assert {key: s.conf.get(key) for key in expected} == expected, k
+
+
+@pytest.mark.parametrize("cpus, parts", [("3", "3"), ("16", "8")])
+def test_wrapped_query_derives_partitions_from_input(
+        spark, sf_dir, monkeypatch, cpus, parts):
+    """sf0.001 is far below 8 x 2 MiB, so the rule lands on its floor of
+    8 partitions, capped at the core count."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", cpus)
+    s = spark.newSession()
+    s.conf.set(PARTITIONS, "200")
+    entry_mod.queries()["q1_pricing_summary"](s, sf_dir)
+    assert s.conf.get(PARTITIONS) == parts
+
+
+def _sources(subdirs, files):
+    for sub in subdirs:
+        yield from glob.glob(os.path.join(ROOT, sub, "**", "*.py"),
+                             recursive=True)
+    for f in files:
+        yield os.path.join(ROOT, f)
+
+
+def _str_arg(call: ast.Call) -> str | None:
+    if call.args and isinstance(call.args[0], ast.Constant):
+        return call.args[0].value
+    return None
+
+
+def test_session_py_is_the_only_partition_writer():
+    """No ``.config("spark.sql.shuffle.partitions", ...)`` or
+    ``conf.set("spark.sql.shuffle.partitions", ...)`` outside session.py,
+    and no package module but session.py reads ``SPARK_GRAFT_CPUS``."""
+    writers = []
+    for path in _sources(["mental_health_bigdata_project_spark", "scripts",
+                          "tests"], ["__spark_entry__.py", "bench.py"]):
+        if path == SESSION_PY:
+            continue
+        for node in ast.walk(ast.parse(open(path).read())):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and _str_arg(node) == PARTITIONS
+                    and (node.func.attr == "config"
+                         or (node.func.attr == "set"
+                             and isinstance(node.func.value, ast.Attribute)
+                             and node.func.value.attr == "conf"))):
+                writers.append(
+                    f"{os.path.relpath(path, ROOT)}:{node.args[0].lineno}")
+    assert not writers, writers
+
+    readers = []
+    for path in _sources(["mental_health_bigdata_project_spark"], []):
+        if path == SESSION_PY:
+            continue
+        for node in ast.walk(ast.parse(open(path).read())):
+            if isinstance(node, ast.Constant) and node.value == "SPARK_GRAFT_CPUS":
+                readers.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not readers, readers
