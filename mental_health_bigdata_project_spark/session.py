@@ -14,6 +14,19 @@ partition count.
 applies the same table to a live session (a caller of
 ``__spark_entry__`` hands over its own plain one) and sets the partition
 count, sized to the input data when the query's ``sf_dir`` is given.
+
+Two confs are static, so only ``configure`` can set them: Kryo, and the
+size of Spark's JVM-wide generated-class cache
+(``spark.sql.codegen.cache.maxEntries``, ``CODEGEN_CACHE_ENTRIES``).
+Spark's default of 100 classes is below this engine's working set: one
+round of the perfbench ``queries`` workload (three registry queries)
+generates about 104 classes and one ``index_stream`` pass about 310, so
+under the default every warm run evicts and recompiles its own classes
+(40-73 compiles per warm ``queries`` round, 2-4 with the larger
+cache).  The cache is built once per JVM, from the conf of the first
+session that generates code, so a session built without ``configure``
+(such as the plain one a caller hands to ``__spark_entry__``) keeps
+Spark's 100, and ``ensure_runtime_confs`` cannot change that.
 """
 
 from __future__ import annotations
@@ -36,6 +49,10 @@ CONFS = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.parquet.filterPushdown": "true",
 }
+
+# Generated classes kept by the JVM-wide codegen cache (static conf, see
+# the module docstring); about 6x the largest measured working set.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def default_master() -> str:
@@ -62,14 +79,17 @@ def _input_bytes(sf_dir: str) -> int:
 
 
 def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
-    """Apply ``CONFS`` (plus Kryo, which only a builder can set) to any
-    builder.  The partition count is set here only when given; otherwise
-    ``ensure_runtime_confs`` sets it once the context exists."""
+    """Apply ``CONFS`` (plus the static Kryo and codegen-cache confs,
+    which only a builder can set) to any builder.  The partition count
+    is set here only when given; otherwise ``ensure_runtime_confs`` sets
+    it once the context exists."""
     for k, v in CONFS.items():
         builder = builder.config(k, v)
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return builder.config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    return (builder
+            .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+            .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)))
 
 
 def ensure_runtime_confs(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:

@@ -1,24 +1,27 @@
 """Session configuration has one owner, ``session.py``: the conf table,
-the core count (read at call time) and the data-derived shuffle
-partition rule.  Every case runs on ``spark.newSession()`` so the shared
-fixture's confs stay untouched."""
+the core count (read at call time), the data-derived shuffle
+partition rule and the static codegen cache size.  Every case runs on
+``spark.newSession()`` so the shared fixture's confs stay untouched."""
 
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import os
 
 import pytest
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import __spark_entry__ as entry_mod
 from mental_health_bigdata_project_spark.session import (
-    CONFS, ensure_runtime_confs)
+    CODEGEN_CACHE_ENTRIES, CONFS, configure, ensure_runtime_confs)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "mental_health_bigdata_project_spark")
 SESSION_PY = os.path.join(PACKAGE, "session.py")
 PARTITIONS = "spark.sql.shuffle.partitions"
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 
 
 def test_core_count_read_at_call_time(spark, monkeypatch):
@@ -58,6 +61,39 @@ def test_wrapped_query_derives_partitions_from_input(
     s.conf.set(PARTITIONS, "200")
     entry_mod.queries()["q1_pricing_summary"](s, sf_dir)
     assert s.conf.get(PARTITIONS) == parts
+
+
+def test_configure_sizes_codegen_cache(spark):
+    assert configure(SparkSession.Builder())._options[CODEGEN_CACHE] == \
+        str(CODEGEN_CACHE_ENTRIES)
+    assert spark.conf.get(CODEGEN_CACHE) == str(CODEGEN_CACHE_ENTRIES)
+
+
+def _compiles(spark) -> int:
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(cm.METRIC_COMPILATION_TIME().getCount())
+
+
+def test_warm_query_compiles_nothing_after_filler(spark, sf_dir):
+    """A registry query re-run after 150 other generated classes compiles
+    nothing: the JVM-wide codegen cache holds more than Spark's default
+    100 entries, so the filler does not evict the query's classes."""
+    q1 = entry_mod.queries()["q1_pricing_summary"]
+    s = spark.newSession()
+
+    def run_q1() -> int:
+        c0 = _compiles(s)
+        q1(s, sf_dir).write.format("noop").mode("overwrite").save()
+        return _compiles(s) - c0
+
+    run_q1()
+    # Each branch inlines its own literal, so each is a distinct class.
+    c0 = _compiles(s)
+    functools.reduce(DataFrame.union, [
+        s.range(1).select((F.col("id") + i).alias("x")) for i in range(150)
+    ]).collect()
+    assert _compiles(s) - c0 >= 150
+    assert run_q1() == 0
 
 
 def _sources(subdirs, files):

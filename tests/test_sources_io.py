@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from mental_health_bigdata_project_spark.operators import io as mio
@@ -342,3 +343,84 @@ def test_bloom_file_index_prunes_point_lookups(spark, sf_dir, tmp_path):
 
     absent = key + 999_999
     assert mio.read_bloom_pruned(spark, out, idx, absent).count() == 0
+
+
+# -- per-process schema memo (sources/tables.py) ---------------------------
+
+def _jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def _write(path, **cols) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_schema_memo_skips_inference_job(spark, tmp_path):
+    """A file's second load, in a fresh session, runs no Spark job (the
+    footer-reading inference job is paid once per process) and sees the
+    same schema and rows."""
+    _write(tmp_path / "t.parquet", k=[1, 2, 3], v=["a", "b", "c"])
+    first = load_table(spark.newSession(), str(tmp_path), "t")
+    s = spark.newSession()
+    j0 = _jobs(s)
+    again = load_table(s, str(tmp_path), "t")
+    assert _jobs(s) == j0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_schema_memo_reinfers_rewritten_file(spark, tmp_path):
+    _write(tmp_path / "t.parquet", k=[1, 2, 3])
+    assert load_table(spark.newSession(), str(tmp_path), "t").dtypes == \
+        [("k", "bigint")]
+    _write(tmp_path / "t.parquet", k=["x", "yy", "zzz", "w"])
+    df = load_table(spark.newSession(), str(tmp_path), "t")
+    assert df.dtypes == [("k", "string")]
+    assert sorted(r.k for r in df.collect()) == ["w", "x", "yy", "zzz"]
+
+
+def test_schema_memo_keys_on_nanos_conf(spark, tmp_path):
+    """A TIMESTAMP(NANOS) ``events.ts`` is a bigint under nanosAsLong
+    (normalized to TIMESTAMP_NTZ) and unreadable without it; a schema
+    inferred under one setting is never served to the other."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    _write(tmp_path / "events.parquet", event_id=[1],
+           ts=pa.array([1_700_000_000_123_456_789], pa.timestamp("ns")))
+    want = [(1, datetime.datetime(2023, 11, 14, 22, 13, 20, 123456))]
+
+    def load(nanos_as_long: str):
+        s = spark.newSession()
+        s.conf.set(key, nanos_as_long)
+        return load_table(s, str(tmp_path), "events")
+
+    df = load("true")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+    assert [tuple(r) for r in df.collect()] == want
+    with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
+        load("false")
+    j0 = _jobs(spark)
+    df = load("true")
+    assert _jobs(spark) == j0
+    assert [tuple(r) for r in df.collect()] == want
+
+
+def test_schema_memo_leaves_directories_to_spark(spark, tmp_path):
+    """A directory table is inferred from its current listing on every
+    load: rewriting it with another column type is seen at once."""
+    out = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,), (2,)], "k bigint").write.parquet(out)
+    assert load_table(spark.newSession(), str(tmp_path), "t").dtypes == \
+        [("k", "bigint")]
+    spark.createDataFrame([("a",), ("b",), ("c",)], "k string") \
+        .write.mode("overwrite").parquet(out)
+    df = load_table(spark.newSession(), str(tmp_path), "t")
+    assert df.dtypes == [("k", "string")]
+    assert sorted(r.k for r in df.collect()) == ["a", "b", "c"]
