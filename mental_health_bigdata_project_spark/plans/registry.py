@@ -15,8 +15,9 @@ across Spark and DuckDB (see SURVEY.md §5.2):
   decimal scale, so Spark/DuckDB cast-rounding agree on every input.)
 - Ties at LIMIT / row_number boundaries always carry a deterministic
   tiebreak key.
-- ``events.ts`` (parquet NANOS) is CAST(ts AS TIMESTAMP) in oracle SQL,
-  matching the engine's ns->us truncation.
+- ``events.ts`` is CAST(ts AS TIMESTAMP) in oracle SQL.  The testdata
+  stores it as parquet MICROS; for a file storing NANOS the cast
+  matches the engine's ns->us truncation.
 """
 
 from __future__ import annotations

@@ -6,9 +6,14 @@ package).  Here every conf the engine sets is decided in this module:
 AQE on (runtime join re-planning, partition coalescing, skew handling),
 Arrow enabled for any pandas-UDF paths, UTC session time zone
 (deterministic timestamp semantics against the DuckDB oracle),
-nanos-as-long parquet reads (the testdata's ``events.ts`` is
-TIMESTAMP(NANOS), which Spark does not natively map), and the shuffle
-partition count.
+nanos-as-long parquet reads (a parquet TIMESTAMP(NANOS) column, which
+Spark does not natively map, reads as bigint and ``sources/tables.py``
+normalizes it; the testdata's ``events.ts`` is TIMESTAMP(MICROS)), and
+the shuffle partition count.  Python workers get this package's parent
+directory on their ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``
+on a builder, the context's worker environment on a live session), so
+queries that run Python on the workers import the package whatever the
+driver's working directory is.
 
 ``configure`` applies ``CONFS`` to a builder; ``ensure_runtime_confs``
 applies the same table to a live session (a caller of
@@ -50,6 +55,10 @@ CONFS = {
     "spark.sql.parquet.filterPushdown": "true",
 }
 
+# The directory holding this package, put on the Python workers' path.
+PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__)))
+
 # Generated classes kept by the JVM-wide codegen cache (static conf, see
 # the module docstring); about 6x the largest measured working set.
 CODEGEN_CACHE_ENTRIES = 2000
@@ -88,12 +97,14 @@ def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = No
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     return (builder
+            .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
             .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
             .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)))
 
 
 def ensure_runtime_confs(spark: SparkSession, sf_dir: str | None = None) -> SparkSession:
-    """Apply ``CONFS`` and the shuffle partition count to a live session.
+    """Apply ``CONFS``, the shuffle partition count and the workers'
+    ``PYTHONPATH`` entry to a live session.
 
     The count is the core count, or with the query's input dir
     ``min(cores, max(8, input_bytes // 2 MiB))``.  The data-derived form
@@ -113,6 +124,12 @@ def ensure_runtime_confs(spark: SparkSession, sf_dir: str | None = None) -> Spar
             conf.set(k, v)
         except Exception:  # pragma: no cover - conf may be locked
             pass
+    # Python functions capture this environment when they are built, so
+    # it must be set before the query's plan is
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([PACKAGE_PARENT, *paths])
     return spark
 
 

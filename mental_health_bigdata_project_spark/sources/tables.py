@@ -11,8 +11,10 @@ Scale notes (100 TB posture):
   prunes partitions from pushed-down filters.  A single-file table's
   inferred schema is kept per process (``_SCHEMAS``), so only the first
   load of a file pays Spark's one-task footer-reading job.
-- ``events.ts`` is parquet TIMESTAMP(NANOS); Spark maps it via
-  ``spark.sql.legacy.parquet.nanosAsLong`` and we normalize to
+- ``events.ts`` in the testdata is parquet TIMESTAMP(MICROS) (pyarrow
+  ``timestamp[us]``) and reads as TIMESTAMP_NTZ directly.  A file that
+  stores it as TIMESTAMP(NANOS) reads as bigint under
+  ``spark.sql.legacy.parquet.nanosAsLong`` and we normalize it to
   TIMESTAMP_NTZ with integer division (exact, no float rounding).
 """
 
@@ -29,8 +31,8 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
-# Columns written as TIMESTAMP(NANOS) that surface as bigint under
-# nanosAsLong and must be normalized to TIMESTAMP_NTZ.
+# Columns that, when a file stores them as TIMESTAMP(NANOS), surface
+# as bigint under nanosAsLong and must be normalized to TIMESTAMP_NTZ.
 _NANOS_COLS = {"events": ["ts"]}
 
 

@@ -34,9 +34,8 @@ atomically.
 Snapshot layout (inside each table directory):
 
 - ``batch_id=*/``          live delta partitions (written by the sinks;
-                           the vector index nests them one level down
-                           as ``cell=X/batch_id=N`` — discovery and GC
-                           handle both layouts)
+                           a store with a second partition column nests
+                           it below: ``batch_id=N/bucket=B``)
 - ``_compacted_v{k}/``     consolidated rows for every batch <= through,
                            carrying a literal ``batch_id = through``
                            column; the underscore prefix makes Spark's
@@ -78,18 +77,9 @@ def _manifest_path(table_path: str) -> str:
 
 
 def _batch_dirs(table_path: str) -> list[str]:
-    """Every ``batch_id=*`` partition directory of the table — at the
-    root (chunk/span/BM25 layout) or nested one level below another
-    partition column (the near-dup vector index is partitioned by
-    ``(cell, batch_id)``, so its batch dirs live at
-    ``cell=X/batch_id=N``).  Underscore-prefixed dirs (compacted
-    stores) never match ``*=*`` and are skipped."""
-    dirs = glob.glob(os.path.join(table_path, "batch_id=*"))
-    for parent in glob.glob(os.path.join(table_path, "*=*")):
-        if os.path.basename(parent).startswith("batch_id="):
-            continue
-        dirs.extend(glob.glob(os.path.join(parent, "batch_id=*")))
-    return dirs
+    """Every ``batch_id=*`` partition directory of the table; every
+    delta layout puts ``batch_id`` first, at the table root."""
+    return glob.glob(os.path.join(table_path, "batch_id=*"))
 
 
 def _batch_id_of(d: str) -> int | None:
@@ -131,21 +121,13 @@ def _read_deltas(spark, table_path: str, after_batch: int):
     return df.filter(F.col("batch_id") > F.lit(after_batch))
 
 
-def read_live(spark, table_path: str,
-              allow_missing_delta_columns: bool = False) -> DataFrame:
+def read_live(spark, table_path: str) -> DataFrame:
     """The manifest-aware live view of a delta-indexed table: the
     consolidated store (if any) unioned with the delta partitions it
     does not cover.  Without a manifest this is exactly
-    ``spark.read.parquet(table_path)``.
-
-    ``allow_missing_delta_columns`` reconciles a LAYOUT-DRIFTED store
-    (deltas missing columns the consolidated store has, e.g. a
-    half-migrated pre-bucketed setsim prefix index) by union-by-name
-    with NULL backfill.  Off by default: an ordinary reader handed
-    silent NULLs in a partition-pruning column would drop rows — only
-    a caller that REPAIRS the missing columns afterwards (a
-    ``compact_index`` transform recomputing them from content) may
-    turn it on."""
+    ``spark.read.parquet(table_path)``.  Deltas missing a column of the
+    consolidated store (a store of an earlier layout) fail the union
+    with Spark's unresolved-column error."""
     m = load_manifest(table_path)
     if m is None:
         return spark.read.parquet(table_path)
@@ -153,8 +135,6 @@ def read_live(spark, table_path: str,
     deltas = _read_deltas(spark, table_path, m["through"])
     if deltas is None:
         return comp
-    if allow_missing_delta_columns:
-        return comp.unionByName(deltas, allowMissingColumns=True)
     return comp.unionByName(deltas.select(*comp.columns))
 
 
@@ -163,10 +143,9 @@ def write_delta(df: DataFrame, batch_id: int, path: str,
     """Write ``df`` as micro-batch ``batch_id``'s delta of the table at
     ``path``: a literal ``batch_id`` column, dynamic partition
     overwrite, so a replayed batch rewrites only its own partitions.
-    ``partition_by`` names the partition columns of layouts that nest
-    another column beside ``batch_id`` (``("batch_id", "bucket")``,
-    the legacy ``("cell", "batch_id")`` vector index); ``df`` carries
-    those columns itself."""
+    ``partition_by`` names the partition columns of a layout that nests
+    a second column below ``batch_id`` (``("batch_id", "bucket")``);
+    ``df`` carries that column itself."""
     (df.withColumn("batch_id", F.lit(batch_id))
      .write.mode("overwrite")
      .option("partitionOverwriteMode", "dynamic")
@@ -272,7 +251,6 @@ def _check_through(table_path: str, through: int) -> int:
 def compact_index(spark, table_path: str, through: int,
                   partition_by: list[str] | None = None,
                   transform=None,
-                  reconcile_schema: bool = False,
                   transform_keeps_batch: bool = False,
                   manifest_extra: dict | None = None) -> dict:
     """Consolidate every live row with batch_id <= ``through`` into a
@@ -292,23 +270,18 @@ def compact_index(spark, table_path: str, through: int,
     "row batch <= tombstone horizon"); the output's batch_id is still
     rewritten to ``through``.  Re-compaction is
     supported: the previous compacted store (batch_id = old through <=
-    new through) folds into the new one.  ``reconcile_schema`` reads
-    the live view with NULL backfill for delta-missing columns (see
-    ``read_live``) — pass it ONLY together with a ``transform`` that
-    recomputes those columns from content, or the NULLs land in the
-    consolidated store.  ``manifest_extra`` merges caller-owned keys
-    into the committed manifest ATOMICALLY with the store flip (the
-    setsim epoch pointer rides this: the prefix store's element order
-    and the pointer to that order must never be readable separately).
+    new through) folds into the new one.  ``manifest_extra`` merges
+    caller-owned keys into the committed manifest ATOMICALLY with the
+    store flip (the setsim epoch pointer rides this: the prefix store's
+    element order and the pointer to that order must never be readable
+    separately).
     Returns the new manifest."""
     _check_through(table_path, through)
     m = load_manifest(table_path)
     version = (m["version"] + 1) if m else 1
     dest_name = f"_compacted_v{version}"
 
-    live = read_live(
-        spark, table_path,
-        allow_missing_delta_columns=reconcile_schema).filter(
+    live = read_live(spark, table_path).filter(
         F.col("batch_id") <= F.lit(through))
     if transform is not None:
         live = transform(live if transform_keeps_batch
@@ -345,12 +318,6 @@ def compact_index(spark, table_path: str, through: int,
         bid = _batch_id_of(d)
         if bid is not None and bid <= through:
             shutil.rmtree(d, ignore_errors=True)
-            parent = os.path.dirname(d)
-            # a (cell, batch_id) layout can leave an empty cell=X shell
-            # behind; drop it so partition discovery stays clean
-            if (os.path.normpath(parent) != os.path.normpath(table_path)
-                    and not os.listdir(parent)):
-                shutil.rmtree(parent, ignore_errors=True)
     for d in glob.glob(os.path.join(table_path, "_compacted_v*")):
         if os.path.basename(d) != dest_name:
             shutil.rmtree(d, ignore_errors=True)
@@ -359,25 +326,11 @@ def compact_index(spark, table_path: str, through: int,
 
 def compact_vector_index(spark, index_dir: str, through: int) -> dict:
     """Compact the streaming embedding-dedup vector index
-    (``neardup.dedup_embeddings_against_index``'s ``vectors`` table).
-
-    r10 stores are partitioned ``(batch_id, bucket)`` (fixed dir count
-    — see ``neardup._vec_bucket``) and keep the ``bucket``
-    partitioning through compaction so probe pruning survives.  A
-    LEGACY ``(cell, batch_id)`` store stays cell-partitioned — a store
-    NEVER changes layout (live deltas keep landing in the old layout,
-    and a bucketed compacted dir beside cell-partitioned deltas would
-    make every union read fail on the missing column, the half-
-    migrated poison pill the setsim shim exists for; migrating a
-    legacy vector store means rebuilding it).  Superseded nested
-    ``cell=X/batch_id=N`` dirs and any emptied ``cell=X`` shells are
-    garbage-collected."""
-    path = os.path.join(index_dir, "vectors")
-    legacy = bool(glob.glob(os.path.join(path, "cell=*"))
-                  or glob.glob(os.path.join(path, "_compacted_v*",
-                                            "cell=*")))
-    return compact_index(spark, path, through,
-                         partition_by=["cell"] if legacy else ["bucket"])
+    (``neardup.dedup_embeddings_against_index``'s ``vectors`` table),
+    keeping its ``bucket`` partitioning (see ``neardup._vec_bucket``)
+    so probe pruning survives."""
+    return compact_index(spark, os.path.join(index_dir, "vectors"),
+                         through, partition_by=["bucket"])
 
 
 def compact_bm25_index(spark, index_dir: str, through: int,

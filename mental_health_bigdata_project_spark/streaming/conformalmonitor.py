@@ -87,43 +87,14 @@ def coverage_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
     write_delta(delta, batch_id, os.path.join(index_dir, "coverage"))
 
 
-def _tolerate_old_state(df: DataFrame) -> DataFrame:
-    """Backward-compatible read of the coverage state (ADVICE r9): a
-    state directory written before the fairness arm lacks
-    ``covered_marginal`` (and ``total_marginal``, the marginal BASIS
-    column compaction folds) — backfill them as NULL so the sums skip
-    those batches instead of failing column resolution.  Marginal
-    coverage is then reported over the batches that actually recorded
-    it (NULL when none have).  Caveat: Spark's plain parquet read does
-    not merge schemas, so a directory MIXING pre- and post-upgrade
-    delta files should be compacted once at migration (``_fold``
-    writes the unified schema); the helper guarantees the
-    all-old and all-new layouts read correctly either way."""
-    for c in ("covered_marginal", "total_marginal"):
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("bigint"))
-    return df
-
-
-def _marginal_basis():
-    """The rows' marginal-coverage denominator: the explicit folded
-    column when present, else this delta's total iff it recorded
-    marginal coverage at all."""
-    return F.coalesce(
-        F.col("total_marginal"),
-        F.when(F.col("covered_marginal").isNotNull(), F.col("total")))
-
-
 def _fold(live: DataFrame) -> DataFrame:
-    """Per-group coverage sums.  Tolerates pre-fairness-arm deltas
-    (ADVICE r9) and carries the marginal BASIS, so the served gap stays
-    correct across mixed-era histories and compaction writes the
-    unified schema."""
-    return (_tolerate_old_state(live).groupBy("grp")
+    """Per-group sums of the four recorded columns; compaction writes
+    the delta schema back."""
+    return (live.groupBy("grp")
             .agg(F.sum("covered").cast("bigint").alias("covered"),
                  F.sum("covered_marginal").cast("bigint")
                  .alias("covered_marginal"),
-                 F.sum(_marginal_basis()).cast("bigint")
+                 F.sum("total_marginal").cast("bigint")
                  .alias("total_marginal"),
                  F.sum("total").cast("bigint").alias("total")))
 
@@ -134,8 +105,6 @@ def serve_coverage(spark: SparkSession, artifact_dir: str,
     everything ingested so far."""
     cur = read_state(spark, os.path.join(index_dir, "coverage"), _fold)
     covg = F.col("covered").cast("double") / F.col("total")
-    # marginal coverage only over batches that recorded it (pre-r9
-    # deltas lack the column — ADVICE r9); NULL when none have
     covm = (F.col("covered_marginal").cast("double")
             / F.col("total_marginal"))
     return cur.select(

@@ -115,34 +115,6 @@ def _vec_bucket(cell_col):
     return F.pmod(cell_col, F.lit(N_VEC_BUCKETS)).cast("int")
 
 
-def _read_vector_index(spark, idx: str, batch_id: int):
-    """Read the prior vector index, returning ``(df_or_None, legacy)``
-    with its ``bucket`` partition column.  Stores written before the
-    bucketed layout are partitioned ``(cell, batch_id)`` and carry no
-    ``bucket`` column — detected by the unresolved-column failure and
-    re-read with bucket DERIVED from cell (identical values; only the
-    partition pruning is lost).  The caller must keep delta writes in
-    the detected layout (mixed partition-column lists break the root
-    read); a legacy store stays legacy for its lifetime — the layouts
-    never mix, so the half-migrated ambiguity the setsim shim handles
-    cannot arise here."""
-    from pyspark.errors import AnalysisException
-
-    from .setsimdedup import _is_missing_bucket
-
-    cols = [F.col("cell").alias("_icell"), F.col("_iemb")]
-    try:
-        return (read_index(spark, idx, cols + [F.col("bucket")],
-                           before_batch=batch_id), False)
-    except AnalysisException as e:
-        if not _is_missing_bucket(e):
-            raise
-    legacy = read_index(spark, idx, cols, before_batch=batch_id)
-    if legacy is not None:
-        legacy = legacy.withColumn("bucket", _vec_bucket(F.col("_icell")))
-    return legacy, True
-
-
 def dedup_embeddings_against_index(batch_df: DataFrame, batch_id: int,
                                    out_dir: str, index_dir: str,
                                    id_col: str = "vec_id",
@@ -160,9 +132,7 @@ def dedup_embeddings_against_index(batch_df: DataFrame, batch_id: int,
     the same intra-cell-only cost model as the batch query.
     Replay-idempotent via batch_id dynamic partition overwrite on the
     accepted output; the index is partitioned by (batch_id, bucket)
-    so a retried batch rewrites only its own slices.  Stores written
-    under the pre-r10 (cell, batch_id) layout are detected and kept
-    legacy for their lifetime (_read_vector_index)."""
+    so a retried batch rewrites only its own slices."""
     from ..functions.vectors import dot_product, l2_norm, to_double_array
     from ..plans.similarity import embedding_cell_expr
 
@@ -180,7 +150,9 @@ def dedup_embeddings_against_index(batch_df: DataFrame, batch_id: int,
     b = b.withColumn("_nrm", l2_norm(F.col("_emb")))
 
     idx = os.path.join(index_dir, "vectors")
-    seen, legacy_layout = _read_vector_index(spark, idx, batch_id)
+    seen = read_index(spark, idx, [F.col("cell").alias("_icell"),
+                                   F.col("_iemb"), F.col("bucket")],
+                      before_batch=batch_id)
 
     if seen is not None:
         # candidates need cell EQUALITY with a batch vector, so prior
@@ -222,17 +194,11 @@ def dedup_embeddings_against_index(batch_df: DataFrame, batch_id: int,
     # fixed-bucket delta layout (r10 round 2; see _vec_bucket): cluster
     # by bucket so each of the <= N_VEC_BUCKETS dirs gets one file per
     # batch (guide §6 small-files), and the dynamic-overwrite commit
-    # touches a BOUNDED dir count instead of one dir per cell.  A
-    # LEGACY (cell, batch_id) store keeps receiving legacy-layout
-    # deltas — mixing partition-column lists breaks the root read.
-    delta = kept.select("cell", F.col("_emb").alias("_iemb"))
-    if legacy_layout:
-        write_delta(delta.repartition("cell"), batch_id, idx,
-                    partition_by=("cell", "batch_id"))
-    else:
-        write_delta(delta.withColumn("bucket", _vec_bucket(F.col("cell")))
-                    .repartition("bucket"), batch_id, idx,
-                    partition_by=("batch_id", "bucket"))
+    # touches a BOUNDED dir count instead of one dir per cell.
+    write_delta(kept.select("cell", F.col("_emb").alias("_iemb"))
+                .withColumn("bucket", _vec_bucket(F.col("cell")))
+                .repartition("bucket"), batch_id, idx,
+                partition_by=("batch_id", "bucket"))
 
 
 def run_incremental_near_dedup(stream: DataFrame, out_dir: str,

@@ -66,14 +66,13 @@ import glob
 import os
 import shutil
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import (setsim_candidates_between, setsim_prefix_rows,
                              setsim_shingles, setsim_verify_pairs, tokens_col)
-from .compaction import (_check_through, _read_deltas, compact_index,
-                         load_manifest, read_index, read_live,
-                         run_available_now, write_delta)
+from .compaction import (_check_through, compact_index, load_manifest,
+                         read_index, read_live, run_available_now,
+                         write_delta)
 
 _T = 0.5
 N_BUCKETS = 16          # shingle-hash partitions of the prefix index
@@ -117,8 +116,8 @@ def setsim_arrays(df: DataFrame, id_col: str = "doc_id",
     ascending, with df defaulting to 0 for shingles absent from the
     epoch's df snapshot.  With no snapshot (``dforder=None``, the
     pre-epoch store state) every df is 0 and the order reduces
-    EXACTLY to the original fixed md5-content order, so legacy stores
-    behave bit-identically.  With a snapshot (written by
+    EXACTLY to the original fixed md5-content order, so a store never
+    re-sorted behaves bit-identically.  With a snapshot (written by
     ``compact_setsim_index``'s re-sort), rare shingles sort into the
     prefix — the batch twin's rarest-first pruning order — and unseen
     (hence rare) shingles sort first by construction.  Docs with no
@@ -152,88 +151,6 @@ def _arrays_from_shingles(sh: DataFrame,
             .withColumn("sz", F.size("arr")))
 
 
-def _is_missing_bucket(e) -> bool:
-    """True iff ``e`` is specifically "the column `bucket` does not
-    resolve" — matched on the error CONDITION plus the quoted column
-    name, not a bare ``"bucket" in str(e)`` substring test (which would
-    misclassify any unrelated analysis error whose message merely
-    mentions the word, e.g. a corrupt file under a path containing
-    'bucket', as a legacy store)."""
-    get = getattr(e, "getCondition", None) or getattr(
-        e, "getErrorClass", None)
-    cond = get() if get is not None else None
-    if cond is not None and not str(cond).startswith("UNRESOLVED_COLUMN"):
-        return False
-    return "`bucket`" in str(e)
-
-
-def _read_prefix_index(spark, index_dir: str, batch_id: int):
-    """Read the prior prefix index with its ``bucket`` partition
-    column; returns ``(df_or_None, legacy)``.
-
-    Migration shim: indexes written before the bucketed layout carry no
-    ``bucket`` column, and selecting it would fail EVERY retry of the
-    batch (a deterministic poison pill for an upgrading stream) — so on
-    an unresolved-column failure re-read the legacy layout and BACKFILL
-    ``bucket = crc32(shingle) % N_BUCKETS``.  Values are identical by
-    construction; only the partition-pruning benefit is lost until
-    ``compact_setsim_index`` rewrites the store bucketed.  The caller
-    must keep DELTA WRITES in the detected layout too (Spark refuses a
-    root read over dirs with conflicting partition-column lists), so
-    ``legacy=True`` means "this store migrates at compaction, not
-    mid-stream".
-
-    The fallback reads the compacted store and the delta partitions
-    DIRECTLY (not through ``read_live``'s column union) and backfills
-    ``bucket`` per-side: a half-migrated store — ``compact_setsim_index``
-    ran with ``through`` below the newest batch, or a batch landed a
-    legacy delta while compaction was in flight — has a BUCKETED
-    compacted dir alongside bucket-less deltas, and ``read_live``'s
-    ``comp.unionByName(deltas.select(*comp.columns))`` fails on the
-    missing column no matter which layout the caller asks for.  Going
-    through ``read_index`` again here would re-raise that same error
-    outside this except and deterministically fail every retry of the
-    batch — the exact poison pill this shim exists to prevent."""
-    cols = ["shingle", "doc_id", "p", "sz"]
-    path = _prefix_path(index_dir)
-    try:
-        return (read_index(spark, path, cols + ["bucket"],
-                           before_batch=batch_id),
-                False)
-    except AnalysisException as e:
-        if not _is_missing_bucket(e):
-            raise
-    m = load_manifest(path)
-    if m is None:
-        # pure legacy store, no compaction yet: read_live is a plain
-        # root read here, so read_index is safe — only the column
-        # list changes
-        legacy = read_index(spark, path, cols, before_batch=batch_id)
-        return ((None if legacy is None
-                 else legacy.withColumn("bucket", _bucket(F.col("shingle")))),
-                True)
-    # half-migrated: bucketed compacted store + legacy deltas above the
-    # horizon.  Replicate read_index's replay guard, then assemble the
-    # live view side-by-side with per-side bucket backfill.
-    if batch_id <= m["through"]:
-        raise ValueError(
-            f"batch {batch_id} is at or below the compaction horizon "
-            f"{m['through']} of {path}; compact only through "
-            f"checkpoint-committed batches")
-    view = spark.read.parquet(os.path.join(path, m["dir"]))
-    if "bucket" not in view.columns:
-        view = view.withColumn("bucket", _bucket(F.col("shingle")))
-    deltas = _read_deltas(spark, path, m["through"])
-    if deltas is not None:
-        if "bucket" not in deltas.columns:
-            deltas = deltas.withColumn("bucket", _bucket(F.col("shingle")))
-        view = (view.select(*cols, "bucket", "batch_id")
-                .unionByName(deltas.select(*cols, "bucket", "batch_id")))
-    return (view.filter(F.col("batch_id") < F.lit(batch_id))
-            .select(*cols, "bucket"),
-            True)
-
-
 def _resort_arrays(arrs: DataFrame, dforder: DataFrame) -> DataFrame:
     """Re-sort every (doc_id, arr, sz) row's elements under the given
     df order.  Rows are keyed by a transient surrogate id, NOT doc_id —
@@ -256,8 +173,7 @@ def compact_setsim_index(spark, index_dir: str, through: int,
     """Compact both setsim index tables through ``through``.
 
     The prefix store MUST keep ``partition_by=["bucket"]`` (the probe's
-    partition pruning — and the path that re-buckets a legacy store);
-    this helper exists so callers can't forget it.
+    partition pruning); this helper exists so callers can't forget it.
 
     **Epoch re-sort (r11, VERDICT r10 item 4)**: when ``through`` is
     the NEWEST live batch of both tables (no surviving deltas — the
@@ -297,17 +213,7 @@ def compact_setsim_index(spark, index_dir: str, through: int,
         return {
             "prefix": compact_index(
                 spark, prefix_path, through,
-                partition_by=["bucket"],
-                # recompute from shingle: identical where bucket
-                # already exists, and it adds the column when folding a
-                # legacy (pre-bucketed-layout) store — which is also
-                # what makes reconcile_schema safe here: a HALF-migrated
-                # store reads with NULL-backfilled bucket, and this
-                # transform overwrites every NULL before the write
-                transform=lambda df: df.withColumn(
-                    "bucket", _bucket(F.col("shingle"))),
-                reconcile_schema=True,
-                manifest_extra=extra),
+                partition_by=["bucket"], manifest_extra=extra),
             "arrs": compact_index(spark, arrs_path, through),
         }
 
@@ -333,7 +239,6 @@ def compact_setsim_index(spark, index_dir: str, through: int,
             transform=lambda _live: (
                 setsim_prefix_rows(resorted, t)
                 .withColumn("bucket", _bucket(F.col("shingle")))),
-            reconcile_schema=True,
             manifest_extra={"dforder_dir": epoch_dir}),
         "arrs": compact_index(
             spark, arrs_path, through,
@@ -373,7 +278,9 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
     setless = (batch_df.select(F.col(id_col).alias("doc_id"))
                .join(arrs.select("doc_id"), "doc_id", "left_anti"))
 
-    prior_pre, legacy_layout = _read_prefix_index(spark, index_dir, batch_id)
+    prior_pre = read_index(spark, _prefix_path(index_dir),
+                           ["shingle", "doc_id", "p", "sz", "bucket"],
+                           before_batch=batch_id)
     prior_arrs = read_index(spark, _arrs_path(index_dir),
                             ["doc_id", "arr", "sz"],
                             before_batch=batch_id)
@@ -443,18 +350,12 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
     # the delta lands as 64 dirs x 32 tiny files per batch — the
     # listing cost of which grew per-batch walls 17 -> 26 s over 8
     # batches in the first cut of this layout.  Clustered, each bucket
-    # dir gets exactly one file per batch.  A LEGACY (pre-bucketed)
-    # store keeps receiving legacy-layout deltas — mixing layouts
-    # breaks the root read's partition discovery — until
-    # compact_setsim_index migrates the whole store at once.
-    delta = setsim_prefix_rows(kept, t)
-    if legacy_layout:
-        write_delta(delta, batch_id, _prefix_path(index_dir))
-    else:
-        write_delta(delta.withColumn("bucket", _bucket(F.col("shingle")))
-                    .repartition(F.col("bucket")), batch_id,
-                    _prefix_path(index_dir),
-                    partition_by=("batch_id", "bucket"))
+    # dir gets exactly one file per batch.
+    write_delta(setsim_prefix_rows(kept, t)
+                .withColumn("bucket", _bucket(F.col("shingle")))
+                .repartition(F.col("bucket")), batch_id,
+                _prefix_path(index_dir),
+                partition_by=("batch_id", "bucket"))
     write_delta(kept.select("doc_id", "arr", "sz"), batch_id,
                 _arrs_path(index_dir))
 

@@ -110,40 +110,17 @@ def test_served_gap_equals_group_gap_query(spark, sf_dir, tmp_path):
         assert served[t].coverage_gap == b.coverage_gap
 
 
-def test_pre_fairness_state_reads_and_model_rebuild_error(
-        spark, sf_dir, tmp_path):
-    """Backward compatibility (ADVICE r9): a coverage state written
-    BEFORE the fairness arm (no covered_marginal column) must serve —
-    group coverage computed, marginal columns NULL — and compaction
-    must fold it; a pre-fairness MODEL must fail with the explicit
-    rebuild message, not a column-resolution error."""
+def test_pre_fairness_model_rebuild_error(spark, sf_dir, tmp_path):
+    """A pre-fairness MODEL (no qhat_marginal column, ADVICE r9) must
+    fail with the explicit rebuild message, not a column-resolution
+    error."""
     import os
 
     import pytest
 
-    art, idx = str(tmp_path / "art"), str(tmp_path / "idx")
+    art = str(tmp_path / "art")
     train, calib, test = _splits(spark, sf_dir)
     conformalmonitor.build_conformal_artifact(train, calib, art)
-    # simulate an old state dir: per-batch deltas WITHOUT the marginal
-    # columns (the exact layout coverage_batch wrote before round 9)
-    old = (test.groupBy(F.col("grp"))
-           .agg(F.count("*").cast("bigint").alias("covered"),
-                F.count("*").cast("bigint").alias("total"))
-           .withColumn("batch_id", F.lit(0)))
-    (old.write.mode("overwrite").partitionBy("batch_id")
-     .parquet(os.path.join(idx, "coverage")))
-    served = conformalmonitor.serve_coverage(spark, art, idx).collect()
-    assert served, "old-layout state must serve"
-    for r in served:
-        assert r.coverage == 1.0             # covered == total above
-        assert r.coverage_marginal is None   # never recorded -> NULL
-        assert r.coverage_gap is None
-    # compaction folds the old layout and writes the unified schema
-    conformalmonitor.compact_coverage_state(spark, idx, through=0)
-    again = conformalmonitor.serve_coverage(spark, art, idx).collect()
-    assert sorted((r.event_type, r.n_test) for r in again) == \
-        sorted((r.event_type, r.n_test) for r in served)
-    # a pre-fairness MODEL artifact fails loudly with the remedy
     old_art = str(tmp_path / "old_art")
     (spark.read.parquet(os.path.join(art, "model"))
      .drop("qhat_marginal")

@@ -1,7 +1,7 @@
 """Fast tier for the shared streaming delta log (streaming/compaction.py):
 every mergeable-state member serves through ``read_state`` and compacts
-with the same fold, on ~10-row static batches, no streaming query.
-The parity/end-to-end twins per member live in the slow-tier
+with the same fold, on ~10-row static batches, no streaming query; a
+store of an earlier on-disk layout is refused.  The parity/end-to-end twins per member live in the slow-tier
 test_streaming_*.py / test_*_monitor.py files."""
 
 from __future__ import annotations
@@ -11,10 +11,16 @@ import glob
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
 
+from mental_health_bigdata_project_spark.plans.similarity import (
+    embedding_cell_expr)
+from mental_health_bigdata_project_spark.plans.textops import (
+    setsim_prefix_rows)
 from mental_health_bigdata_project_spark.streaming import (
     bootstrapstate, calibmonitor, cmsstate, conformalmonitor, driftgate,
-    histstate, hllcount, minhashstate, mixturestate, momentstate,
+    histstate, hllcount, minhashstate, mixturestate, momentstate, neardup,
     setsimdedup, topkstate)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -137,6 +143,77 @@ def test_setsim_rejected_horizon_leaves_no_snapshot(spark, tmp_path):
     with pytest.raises(ValueError, match="exceeds newest live batch"):
         setsimdedup.compact_setsim_index(spark, idx, through=1)
     assert not glob.glob(os.path.join(idx, "dforder", "epoch_v*"))
+
+
+_DOC = "one two three four five six seven eight nine ten eleven"
+_VEC = [1.0, 0.5, -0.2, 0.8, -0.1, 0.3, 0.9, -0.4]
+
+
+def _old_setsim(spark, idx):
+    """Batch 0 as the bucket-less writer laid it out: ``prefix`` and
+    ``arrs`` partitioned by ``batch_id`` only."""
+    arrs = setsimdedup.setsim_arrays(spark.createDataFrame(
+        [(1, _DOC)], "doc_id bigint, text string"))
+    (setsim_prefix_rows(arrs, 0.5).withColumn("batch_id", F.lit(0))
+     .write.partitionBy("batch_id").parquet(f"{idx}/prefix"))
+    (arrs.select("doc_id", "arr", "sz").withColumn("batch_id", F.lit(0))
+     .write.partitionBy("batch_id").parquet(f"{idx}/arrs"))
+
+
+def _next_setsim(spark, idx, out):
+    setsimdedup.dedup_setsim_batch_against_index(
+        spark.createDataFrame([(2, _DOC), (3, "a fresh doc of words")],
+                              "doc_id bigint, text string"), 1, out, idx)
+
+
+def _old_vectors(spark, idx):
+    """Batch 0 in the ``(cell, batch_id)`` vector-index layout."""
+    (spark.createDataFrame([(1, _VEC)], "vec_id bigint, embedding array<float>")
+     .select(embedding_cell_expr("embedding").alias("cell"),
+             F.col("embedding").cast("array<double>").alias("_iemb"))
+     .withColumn("batch_id", F.lit(0))
+     .write.partitionBy("cell", "batch_id").parquet(f"{idx}/vectors"))
+
+
+def _next_vectors(spark, idx, out):
+    neardup.dedup_embeddings_against_index(
+        spark.createDataFrame([(2, [x * 1.01 for x in _VEC])],
+                              "vec_id bigint, embedding array<float>"),
+        1, out, idx)
+
+
+def _old_coverage(spark, idx):
+    """A coverage state without ``covered_marginal`` (nor
+    ``total_marginal``)."""
+    (spark.createDataFrame([("a", 9, 10), ("b", 5, 5)],
+                           "grp string, covered bigint, total bigint")
+     .withColumn("batch_id", F.lit(0))
+     .write.partitionBy("batch_id").parquet(f"{idx}/coverage"))
+
+
+def _serve_coverage(spark, idx, out):
+    conformalmonitor.serve_coverage(spark, out, idx).collect()
+
+
+# earlier layout: (write batch 0 under it, the next batch or serve)
+LAYOUTS = {"setsim": (_old_setsim, _next_setsim),
+           "vectors": (_old_vectors, _next_vectors),
+           "coverage": (_old_coverage, _serve_coverage)}
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_store_of_an_earlier_layout_is_refused(spark, tmp_path, layout):
+    """A store written under an earlier on-disk layout fails its next
+    batch (or its serve) on Spark's unresolved-column error, and nothing
+    is written: no accepted output, no index delta."""
+    write_old, step = LAYOUTS[layout]
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    write_old(spark, idx)
+    before = sorted(glob.glob(f"{tmp_path}/**", recursive=True))
+    with pytest.raises(AnalysisException) as err:
+        step(spark, idx, out)
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert sorted(glob.glob(f"{tmp_path}/**", recursive=True)) == before
 
 
 def _sources():

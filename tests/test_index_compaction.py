@@ -205,58 +205,6 @@ def test_vector_index_compaction_end_to_end(spark, sf_dir, tmp_path):
     assert load_manifest(p)["through"] == 1
 
 
-def test_vector_index_legacy_cell_layout_stays_legacy(spark, tmp_path):
-    """A vector store written under the pre-r10 (cell, batch_id)
-    layout keeps working: batches read it (bucket derived from cell),
-    keep writing legacy-layout deltas (mixed partition-column lists
-    would break the root read), and compaction keeps the cell
-    partitioning."""
-    from pyspark.sql import functions as SF
-
-    from mental_health_bigdata_project_spark.plans.similarity import (
-        embedding_cell_expr)
-    from mental_health_bigdata_project_spark.streaming.compaction import (
-        compact_vector_index)
-    from mental_health_bigdata_project_spark.streaming.neardup import (
-        dedup_embeddings_against_index)
-
-    va = [1.0, 0.5, -0.2, 0.8, -0.1, 0.3, 0.9, -0.4]
-    vnear = [x * 1.01 for x in va]
-    vfresh = [0.2, -0.9, 0.6, 0.1, -0.3, 0.7, -0.8, 0.5]
-
-    def df(rows):
-        return spark.createDataFrame(
-            rows, "vec_id bigint, embedding array<float>")
-
-    out = str(tmp_path / "out")
-    idxd = str(tmp_path / "idx")
-    p = os.path.join(idxd, "vectors")
-    # hand-write batch 0's delta in the LEGACY layout
-    (df([(1, va)])
-     .select(embedding_cell_expr("embedding").alias("cell"),
-             SF.col("embedding").cast("array<double>").alias("_iemb"))
-     .withColumn("batch_id", SF.lit(0))
-     .write.partitionBy("cell", "batch_id").parquet(p))
-
-    # batch 1 against the legacy store: near-copy dropped, fresh kept
-    dedup_embeddings_against_index(df([(2, vnear), (3, vfresh)]),
-                                   1, out, idxd)
-    acc = {r.vec_id for r in
-           spark.read.parquet(os.path.join(out, "accepted")).collect()}
-    assert acc == {3}
-    # the new delta landed in the LEGACY layout, and compaction keeps it
-    assert glob.glob(os.path.join(p, "cell=*", "batch_id=1"))
-    assert not glob.glob(os.path.join(p, "batch_id=*"))
-    compact_vector_index(spark, idxd, through=1)
-    assert glob.glob(os.path.join(p, "_compacted_v1", "cell=*"))
-    # and a batch after compaction still reads/writes correctly
-    dedup_embeddings_against_index(df([(4, vnear), (5, [-x for x in va])]),
-                                   2, out, idxd)
-    acc = {r.vec_id for r in
-           spark.read.parquet(os.path.join(out, "accepted")).collect()}
-    assert acc == {3, 5}
-
-
 def test_horizon_must_name_an_existing_batch(spark, sf_dir, tmp_path):
     """A horizon above the newest live batch would hide later-written
     smaller-id deltas (read_live keeps only batch_id > through); one

@@ -9,6 +9,8 @@ import ast
 import functools
 import glob
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -67,6 +69,30 @@ def test_configure_sizes_codegen_cache(spark):
     assert configure(SparkSession.Builder())._options[CODEGEN_CACHE] == \
         str(CODEGEN_CACHE_ENTRIES)
     assert spark.conf.get(CODEGEN_CACHE) == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_workers_import_package_outside_repo_root(sf_dir, tmp_path):
+    """A driver run from outside the repo root, with the package on its
+    own ``sys.path`` only, runs a query whose Python workers import the
+    package: ``media_decode_wav`` on a plain session handed to
+    ``__spark_entry__``, in a fresh process whose environment carries no
+    ``PYTHONPATH``."""
+    script = "\n".join([
+        "import sys",
+        f"sys.path.insert(0, {ROOT!r})",
+        "from pyspark.sql import SparkSession",
+        "import __spark_entry__ as m",
+        "spark = SparkSession.builder.master('local[1]').getOrCreate()",
+        f"n = m.queries()['media_decode_wav'](spark, {sf_dir!r}).count()",
+        "spark.stop()",
+        "print('ROWS', n)",
+    ])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    run = subprocess.run([sys.executable, "-c", script], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert int(run.stdout.split("ROWS ")[1]) > 0
 
 
 def _compiles(spark) -> int:

@@ -142,110 +142,6 @@ def test_setsim_index_compacts_and_still_dedups(spark, tmp_path):
             _df(spark, [(4, TEXT_D)]), 1, out, idx)
 
 
-def test_setsim_legacy_index_without_bucket_column(spark, tmp_path):
-    """A prefix index persisted by the pre-bucketed layout (batch_id
-    partitions only, no bucket column) must not poison-pill the stream:
-    the probe backfills bucket = crc32(shingle) % N_BUCKETS on read,
-    and compact_setsim_index rewrites the store bucketed."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mental_health_bigdata_project_spark.plans.textops import (
-        setsim_prefix_rows)
-
-    out = str(tmp_path / "out")
-    idx = str(tmp_path / "idx")
-    # hand-write batch 0's index exactly as the OLD writer did:
-    # batch_id-only partitioning, no bucket column
-    arrs = setsimdedup.setsim_arrays(_df(spark, [(1, TEXT_A)]))
-    (setsim_prefix_rows(arrs, 0.5).withColumn("batch_id", F.lit(0))
-     .write.partitionBy("batch_id").parquet(f"{idx}/prefix"))
-    (arrs.select("doc_id", "arr", "sz").withColumn("batch_id", F.lit(0))
-     .write.partitionBy("batch_id").parquet(f"{idx}/arrs"))
-
-    # upgrading stream's next batch reads the legacy store: B must
-    # still hit A (backfilled bucket), C accepted
-    setsimdedup.dedup_setsim_batch_against_index(
-        _df(spark, [(2, TEXT_B), (3, TEXT_C)]), 1, out, idx)
-    acc = {r.doc_id for r in spark.read.parquet(f"{out}/accepted").collect()}
-    assert acc == {3}
-
-    # compaction migrates the store to the bucketed layout
-    setsimdedup.compact_setsim_index(spark, idx, through=1)
-    compacted = [d for d in os.listdir(f"{idx}/prefix")
-                 if d.startswith("_compacted")]
-    assert compacted
-    assert any(sub.startswith("bucket=") for sub in
-               os.listdir(os.path.join(f"{idx}/prefix", compacted[0])))
-    # and the migrated store still dedups: an exact copy of A drops
-    setsimdedup.dedup_setsim_batch_against_index(
-        _df(spark, [(9, TEXT_A), (4, TEXT_D)]), 2, out, idx)
-    acc = {r.doc_id for r in spark.read.parquet(f"{out}/accepted").collect()}
-    assert acc == {3, 4}
-
-
-def test_setsim_half_migrated_store_not_poisoned(spark, tmp_path):
-    """Compacting a LEGACY store with ``through`` below its newest
-    batch leaves a bucketed compacted dir alongside a bucket-less
-    legacy delta.  read_live's column union fails on that store for
-    EITHER requested layout, so a fallback that re-enters it would
-    deterministically fail every retry of the next batch (the ADVICE r6
-    poison-pill finding).  The probe must instead assemble the view
-    side-by-side, backfill bucket per-side, and keep the stream on the
-    legacy delta layout until a full compaction migrates it."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mental_health_bigdata_project_spark.plans.textops import (
-        setsim_prefix_rows)
-
-    out = str(tmp_path / "out")
-    idx = str(tmp_path / "idx")
-    # legacy-layout batches 0 (doc A) and 1 (doc D), as the old writer
-    # persisted them: batch_id partitions only, no bucket column
-    for bid, doc in [(0, (1, TEXT_A)), (2, (4, TEXT_D))]:
-        arrs = setsimdedup.setsim_arrays(_df(spark, [doc]))
-        (setsim_prefix_rows(arrs, 0.5).withColumn("batch_id", F.lit(bid))
-         .write.mode("append").partitionBy("batch_id")
-         .parquet(f"{idx}/prefix"))
-        (arrs.select("doc_id", "arr", "sz")
-         .withColumn("batch_id", F.lit(bid))
-         .write.mode("append").partitionBy("batch_id")
-         .parquet(f"{idx}/arrs"))
-        (_df(spark, [doc]).withColumn("batch_id", F.lit(bid))
-         .write.mode("append").partitionBy("batch_id")
-         .parquet(f"{out}/accepted"))
-
-    # partial migration: horizon stops at batch 0, so the bucketed
-    # compacted store now coexists with the legacy batch_id=2 delta
-    setsimdedup.compact_setsim_index(spark, idx, through=0)
-    legacy_deltas = [d for d in os.listdir(f"{idx}/prefix")
-                     if d.startswith("batch_id=")]
-    assert legacy_deltas == ["batch_id=2"]
-
-    # batch 3 must read the half-migrated store (B dups compacted A;
-    # an exact copy of D dups the legacy delta; C fresh) ...
-    setsimdedup.dedup_setsim_batch_against_index(
-        _df(spark, [(2, TEXT_B), (3, TEXT_C), (8, TEXT_D)]), 3, out, idx)
-    acc = {r.doc_id for r in spark.read.parquet(f"{out}/accepted").collect()}
-    assert acc == {1, 4, 3}
-    # ... and must keep its delta in the LEGACY layout: a bucketed
-    # batch_id=3/bucket=K dir next to the flat batch_id=2 dir would
-    # break the root read's partition discovery for every later batch
-    assert not any(sub.startswith("bucket=") for sub in
-                   os.listdir(f"{idx}/prefix/batch_id=3"))
-
-    # a full compaction then migrates the WHOLE store bucketed, and the
-    # next batch probes it on the fast path
-    setsimdedup.compact_setsim_index(spark, idx, through=3)
-    setsimdedup.dedup_setsim_batch_against_index(
-        _df(spark, [(9, TEXT_A)]), 4, out, idx)
-    acc = {r.doc_id for r in spark.read.parquet(f"{out}/accepted").collect()}
-    assert acc == {1, 4, 3}
-
-
 def test_incremental_setsim_streaming(spark, tmp_path):
     in_dir = tmp_path / "in"
     in_dir.mkdir()
