@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import load_table, register_temp_views
+from .common import dsum
 from .registry import EVENTS_TS, query
 
 
@@ -884,8 +885,7 @@ def pivot_multi_measure(spark, sf_dir):
     piv = (j.groupBy("c_mktsegment")
            .pivot("o_orderpriority", ["1-URGENT", "5-LOW"])
            .agg(F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double").alias("total")))
+                dsum("o_totalprice").alias("total")))
     return piv.select(
         "c_mktsegment",
         F.col("1-URGENT_n").alias("urgent_n"),
@@ -944,19 +944,17 @@ def win_ratio_to_report(spark, sf_dir):
     denominator is an unordered window aggregate (no sort — Spark
     plans a WindowExec with an unbounded frame over the hash-
     partitioned data, effectively a broadcast of one sum per key
-    within the exchange).  Decimal sums keep the denominator exact
-    under any accumulation order; the final share is ONE
-    decimal-by-decimal division cast to double, identical on both
-    engines.  One customer-key shuffle, no sort, at any scale."""
+    within the exchange).  An exact sum keeps the denominator exact
+    under any accumulation order; the final share is ONE double
+    division, identical on both engines.  One customer-key shuffle, no
+    sort, at any scale."""
     orders = _t(spark, sf_dir, "orders")
-    dec = F.col("o_totalprice").cast("decimal(18,2)")
     w = Window.partitionBy("o_custkey")
-    # exact-decimal denominator, ONE double/double division (decimal
-    # division scale rules differ across engines; double IEEE doesn't)
+    # exact denominator, ONE double/double division (decimal division
+    # scale rules differ across engines; double IEEE doesn't)
     return orders.select(
         "o_orderkey", "o_custkey", "o_totalprice",
-        (F.col("o_totalprice") / F.sum(dec).over(w).cast("double"))
-        .alias("share"))
+        (F.col("o_totalprice") / dsum("o_totalprice", w=w)).alias("share"))
 
 
 @query("rfm_segmentation", """
@@ -994,8 +992,7 @@ def rfm_segmentation(spark, sf_dir):
     base = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max("o_orderdate").alias("last_order"),
         F.count("*").alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double").alias("monetary"))
+        dsum("o_totalprice").alias("monetary"))
     mx = orders.agg(F.max("o_orderdate").alias("now"))
     r = (base.crossJoin(F.broadcast(mx))
          .select("custkey",
@@ -2293,11 +2290,9 @@ def agg_theil_inequality(spark, sf_dir):
     global rank; Theil deliberately doesn't)."""
     cs = (_t(spark, sf_dir, "orders")
           .groupBy("o_custkey")
-          .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-               .cast("double").alias("spend")))
+          .agg(dsum("o_totalprice").alias("spend")))
     t = cs.agg(F.count("*").cast("bigint").alias("n"),
-               F.sum(F.col("spend").cast("decimal(18,2)")).cast("double")
-               .alias("tot"))
+               dsum("spend").alias("tot"))
     mu = F.col("tot") / F.col("n")
     terms = (cs.crossJoin(F.broadcast(t))
              .agg(F.sum(((F.col("spend") / mu)

@@ -14,6 +14,7 @@ from pyspark.sql.window import Window
 
 from ..artifacts import SessionMemo as _SessionMemo
 from ..sources import load_table
+from .common import davg, dsum
 from .registry import EVENTS_TS, query
 
 
@@ -178,8 +179,7 @@ def ts_gapfill_interpolate(spark, sf_dir):
     window passes share one shuffle+sort on (user_id, d)."""
     ev = load_table(spark, sf_dir, "events")
     daily = (ev.groupBy("user_id", F.date_trunc("day", "ts").alias("d"))
-             .agg((F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                   / F.count("value")).alias("v")))
+             .agg(davg("value").alias("v")))
     grid = (daily.groupBy("user_id")
             .agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
             .select("user_id",
@@ -652,8 +652,7 @@ def join_temporal_scd2(spark, sf_dir):
                       | (F.col("f.v") < F.col("h.valid_to"))))
             .groupBy("v").agg(
                 F.count("*").alias("n_lines"),
-                F.sum(F.col("h.o_totalprice").cast("decimal(18,2)"))
-                .cast("double").alias("sum_price_at_v")))
+                dsum("h.o_totalprice").alias("sum_price_at_v")))
 
 
 @query("concurrency_peak_bucketed", f"""
@@ -1169,8 +1168,7 @@ def dq_schema_drift(spark, sf_dir):
             .alias("nulls"),
             F.countDistinct("o_orderstatus").cast("bigint")
             .alias("status_card"),
-            (F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-             .cast("double") / F.count("*")).alias("mean_price"))
+            (dsum("o_totalprice") / F.count("*")).alias("mean_price"))
 
     so = profile(o.filter(F.col("o_orderdate") < cut))
     sn = (profile(o.filter(F.col("o_orderdate") >= cut))
@@ -1236,15 +1234,13 @@ def ts_seasonal_decompose(spark, sf_dir):
     final float subtraction."""
     e = _t(spark, sf_dir, "events")
     daily = (e.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                  .alias("total"))
+             .agg(dsum("value").alias("total"))
              .withColumn("dow", F.dayofweek("day").cast("int")))
     w = Window.orderBy("day").rowsBetween(-3, 3)
     tr = daily.select(
         "day", "dow", "total",
         F.when(F.count("*").over(w) == 7,
-               F.sum(F.col("total").cast("decimal(18,2)")).over(w)
-               .cast("double") / 7).alias("trend"))
+               dsum("total", w=w) / 7).alias("trend"))
     seas = (tr.filter(F.col("trend").isNotNull())
             .groupBy("dow")
             .agg((F.sum((F.col("total") - F.col("trend"))
@@ -1291,8 +1287,7 @@ def ts_forecast_snaive(spark, sf_dir):
     group-by and the self-join keys."""
     e = _t(spark, sf_dir, "events")
     daily = (e.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                  .alias("total")))
+             .agg(dsum("value").alias("total")))
     mx = daily.agg(F.max("day").alias("last_day"))
     d = daily.crossJoin(F.broadcast(mx))
     test = (d.filter(F.col("day") > F.date_sub(F.col("last_day"), 7))
@@ -1827,8 +1822,7 @@ def ts_holt_linear(spark, sf_dir):
     data); forecasts re-join the 7-row test split."""
     e = _t(spark, sf_dir, "events")
     daily = (e.groupBy(F.date_trunc("day", "ts").cast("date").alias("day"))
-             .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-                  .alias("total")))
+             .agg(dsum("value").alias("total")))
     mx = daily.agg(F.max("day").alias("last_day"))
     d = daily.crossJoin(F.broadcast(mx))
     train = d.filter(F.col("day") <= F.date_sub(F.col("last_day"), 7))
@@ -2789,8 +2783,7 @@ def conformal_fit(train, calib):
     (streaming/conformalmonitor.py), so stream == batch by
     construction."""
     tr = (train.groupBy("grp")
-          .agg((F.sum(F.col("value").cast("decimal(18,2)"))
-                .cast("double") / F.count("*")).alias("mean_tr"),
+          .agg((dsum("value") / F.count("*")).alias("mean_tr"),
                F.count("*").cast("bigint").alias("n_train"))
           .localCheckpoint(eager=True))        # feeds calib + serving
     cg = (calib
@@ -3893,8 +3886,7 @@ def stat_delta_method_ratio(spark, sf_dir):
          .filter(F.col("value").isNotNull())
          .groupBy((F.col("user_id") % 2).cast("int").alias("arm"),
                   "user_id")
-         .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
-              .alias("yu"),
+         .agg(dsum("value").alias("yu"),
               F.count("*").cast("bigint").alias("nu")))
     d18 = lambda c: F.sum(c.cast("decimal(38,18)")).cast("double")  # noqa: E731
     m = (u.groupBy("arm")

@@ -9,10 +9,13 @@ Conventions that keep the driver's order-insensitive value-hash stable
 across Spark and DuckDB (see SURVEY.md §5.2):
 
 - Every computed column is aliased identically on both sides.
-- SUM/AVG over *double* columns go through DECIMAL(18,s) casts and back
-  to DOUBLE: float summation order is nondeterministic under parallelism,
-  decimal accumulation is exact.  (No double is exactly half-way at any
-  decimal scale, so Spark/DuckDB cast-rounding agree on every input.)
+- SUM/AVG over *double* columns are exact and convert to DOUBLE once:
+  float summation order is nondeterministic under parallelism.  The
+  oracle SQL sums DECIMAL(18,s) casts (``dsum_sql``/``davg_sql``); the
+  Spark side sums the same values as exact 64-bit integer units
+  (``plans.common``: ``units``, ``lsum``, ``dsum``, ``davg``), so both
+  hold the same decimal before the one conversion.  A computed double
+  is rounded with ``round(x, s)`` before either side takes its units.
 - Ties at LIMIT / row_number boundaries always carry a deterministic
   tiebreak key.
 - ``events.ts`` is CAST(ts AS TIMESTAMP) in oracle SQL.  The testdata

@@ -5,8 +5,9 @@ SURVEY.md §2.3); required by the 100 TB north star.
 Scale posture: dimension joins broadcast (region/nation/customer at
 real-TPC-H ratios: broadcast what fits, AQE re-plans the rest); fact-fact
 joins shuffle on their equi keys and AQE handles skew; every aggregate
-is a partial+final hash agg.  Double-typed measures aggregate through
-decimals for run-to-run determinism (see plans.registry docstring).
+is a partial+final hash agg.  Double-typed measures aggregate exactly
+on 64-bit integer units for run-to-run determinism (plans.common,
+plans.registry docstring).
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import load_table, register_temp_views
-from .common import davg, dsum
+from .common import davg, dsum, lsum, revenue_units, units
 from .registry import EVENTS_TS, davg_sql, dsum_sql, query
 
 
@@ -45,18 +46,17 @@ def q1_pricing_summary(spark, sf_dir):
     referenced and the predicate reaches the parquet reader."""
     li = _t(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp_ntz"))
-    # Decimal-domain arithmetic: casting the *double product* to decimal
-    # is tie-sensitive across engines (Spark rounds the shortest decimal
-    # repr, DuckDB the binary value); casting the 2dp-valued inputs first
-    # keeps every multiply/sum exact and engine-agnostic.
-    price_d = F.col("l_extendedprice").cast("decimal(12,2)")
-    disc_price = price_d * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)"))
-    charge = disc_price * (F.lit(1) + F.col("l_tax").cast("decimal(4,2)"))
+    # Exact integer arithmetic on the 2dp inputs' unscaled units: a
+    # double product would be tie-sensitive across engines (Spark rounds
+    # the shortest decimal repr, DuckDB the binary value), and the long
+    # products equal the oracle's decimal products digit for digit.
+    disc_price = revenue_units()                                 # 4dp
+    charge = disc_price * (100 + units("l_tax", 2))              # 6dp
     return li.groupBy("l_returnflag", "l_linestatus").agg(
         dsum("l_quantity").alias("sum_qty"),
         dsum("l_extendedprice").alias("sum_base_price"),
-        F.sum(disc_price).cast("double").alias("sum_disc_price"),
-        F.sum(charge).cast("double").alias("sum_charge"),
+        lsum(disc_price, 4).cast("double").alias("sum_disc_price"),
+        lsum(charge, 6).cast("double").alias("sum_charge"),
         davg("l_quantity").alias("avg_qty"),
         davg("l_extendedprice").alias("avg_price"),
         davg("l_discount", scale=4).alias("avg_disc"),
@@ -460,7 +460,7 @@ def win_rank_orders_by_price(spark, sf_dir):
     FROM orders
 """)
 def win_running_sum(spark, sf_dir):
-    """Running per-customer spend; decimal accumulation keeps every
+    """Running per-customer spend; exact accumulation keeps every
     prefix sum deterministic, (date, orderkey) ordering pins ties."""
     w = (
         Window.partitionBy("o_custkey")
@@ -469,8 +469,7 @@ def win_running_sum(spark, sf_dir):
     )
     return _t(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_orderdate",
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).over(w)
-        .cast("double").alias("running_spend"))
+        dsum("o_totalprice", w=w).alias("running_spend"))
 
 
 @query("win_lag_value", f"""
@@ -550,20 +549,25 @@ def set_except(spark, sf_dir):
 """)
 def q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape: selective dim filter -> two equi joins -> top-10
-    by revenue.  Customer side broadcasts; the orderkey join shuffles
-    once; TakeOrderedAndProject caps the result driver-side."""
+    by revenue.  Eager aggregation (Yan & Larson, VLDB 1995): lineitem
+    is summed per l_orderkey BEFORE it meets orders, because the group
+    key o_orderkey is unique in orders and o_orderdate depends on it —
+    one row per order crosses the join instead of every line.  Customer
+    side broadcasts; TakeOrderedAndProject caps the result driver-side."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
-    l = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp_ntz"))
-    rev = (F.col("l_extendedprice").cast("decimal(12,2)")
-           * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")))
+    rev = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp_ntz"))
+        .groupBy("l_orderkey")
+        .agg(lsum(revenue_units(), 4).alias("rev"))
+    )
     return (
         c.join(o, c.c_custkey == o.o_custkey)
-        .join(l, F.col("l_orderkey") == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
+        .join(rev, F.col("l_orderkey") == o.o_orderkey)
+        .select("o_orderkey", "o_orderdate",
+                F.col("rev").cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "o_orderkey")
         .limit(10)
     )
@@ -597,8 +601,6 @@ def q5_region_revenue(spark, sf_dir):
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    rev = (F.col("l_extendedprice").cast("decimal(12,2)")
-           * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")))
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, F.col("l_orderkey") == o.o_orderkey)
@@ -607,7 +609,7 @@ def q5_region_revenue(spark, sf_dir):
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
+        .agg(lsum(revenue_units(), 4).cast("double").alias("revenue"))
     )
 
 
@@ -629,9 +631,8 @@ def q6_revenue_forecast(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp_ntz"))
         & (F.col("l_discount") >= 0.05) & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24))
-    rev = (F.col("l_extendedprice").cast("decimal(12,2)")
-           * F.col("l_discount").cast("decimal(4,2)"))
-    return l.agg(F.sum(rev).cast("double").alias("revenue"),
+    rev = units("l_extendedprice", 2) * units("l_discount", 2)    # 4dp
+    return l.agg(lsum(rev, 4).cast("double").alias("revenue"),
                  F.count("*").alias("n_items"))
 
 
@@ -644,14 +645,21 @@ def q6_revenue_forecast(spark, sf_dir):
 """)
 def q18_large_orders(spark, sf_dir):
     """TPC-H Q18 shape: group-by-key then HAVING on the aggregate (the
-    classic 'big buyers' reduction)."""
+    classic 'big buyers' reduction).  Eager aggregation (Yan & Larson,
+    VLDB 1995): lineitem is summed per l_orderkey and the HAVING applied
+    BEFORE the join, so only the few large orders meet orders — valid
+    because o_orderkey is unique in orders and o_custkey, o_orderdate
+    depend on it, so grouping the joined rows by the three columns forms
+    exactly the per-l_orderkey groups."""
     o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        o.join(l, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_custkey", "o_orderdate")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).alias("qty_dec"))
+    big = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(lsum(units("l_quantity", 2), 2).alias("qty_dec"))
         .filter(F.col("qty_dec") > 250)
+    )
+    return (
+        o.join(big, big.l_orderkey == o.o_orderkey)
         .select("o_orderkey", "o_custkey", "o_orderdate",
                 F.col("qty_dec").cast("double").alias("sum_qty"))
     )
@@ -735,22 +743,20 @@ def join_salted_skew(spark, sf_dir):
 """)
 def q14_promo_share(spark, sf_dir):
     """TPC-H Q14 shape: fact x part dimension with a conditional revenue
-    share.  Part broadcasts; the decimal sums divide once at the end
+    share.  Part broadcasts; the exact sums divide once at the end
     (one double division -> engine-identical)."""
     l = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz")))
     p = _t(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice").cast("decimal(12,2)")
-           * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")))
-    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(
-        F.lit("0.00").cast("decimal(19,4)"))
+    rev = revenue_units()
+    promo_rev = F.when(F.col("p_type") == "PROMO", rev).otherwise(0)
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
-        # exact decimal sums -> double ONCE each, then identical float
+        # exact sums -> double ONCE each, then identical float
         # arithmetic ((100*a)/b) on both engines
-        .agg(((F.lit(100.0) * F.sum(promo_rev).cast("double"))
-              / F.sum(rev).cast("double")).alias("promo_share"),
+        .agg(((F.lit(100.0) * lsum(promo_rev, 4).cast("double"))
+              / lsum(rev, 4).cast("double")).alias("promo_share"),
              F.count("*").alias("n_items"))
     )
 
@@ -850,18 +856,16 @@ def win_moving_avg(spark, sf_dir):
     """Bounded ROWS frame: 4-row trailing moving average per user — the
     smoothing primitive.  Distinct from win_running_sum's unbounded
     frame (constant-size frame = O(1) update per row in the window
-    scan).  Decimal-domain average: DECIMAL avg is exact at every frame
-    position, so the one cast to double matches DuckDB bit-for-bit."""
+    scan).  The frame sum is exact at every position, so the one
+    cast to double matches DuckDB bit-for-bit."""
     ev = _t(spark, sf_dir, "events")
     w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(-3, Window.currentRow))
-    # exact decimal SUM over the frame, ONE double division — decimal
-    # AVG itself diverges (Spark keeps decimal(22,6), DuckDB divides in
-    # double)
+    # exact SUM over the frame, ONE double division — decimal AVG itself
+    # diverges (Spark keeps decimal(22,6), DuckDB divides in double)
     return ev.select(
         "event_id", "user_id",
-        (F.sum(F.col("value").cast("decimal(18,2)")).over(w).cast("double")
-         / F.count("value").over(w)).alias("mavg_4"))
+        (dsum("value", w=w) / F.count("value").over(w)).alias("mavg_4"))
 
 
 @query("agg_boolean", f"""

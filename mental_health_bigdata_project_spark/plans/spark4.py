@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..sources import load_table, register_temp_views
+from .common import dsum
 from .registry import query
 
 
@@ -226,8 +227,7 @@ def sample_stratified(spark, sf_dir):
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")) % 100 < rate)
     return sampled.groupBy("l_returnflag").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-        .cast("double").alias("sum_qty"))
+        dsum("l_quantity").alias("sum_qty"))
 
 
 @query("recursive_date_spine", """
@@ -294,8 +294,6 @@ def transpose_metrics(spark, sf_dir):
     transposed is a 3-row aggregate (transpose collects the index
     column to name output columns — never call it on a fact table);
     the oracle pins the equivalent conditional-aggregation UNION."""
-    from .common import dsum
-
     li = load_table(spark, sf_dir, "lineitem")
     agg = (li.groupBy("l_returnflag")
            .agg(dsum("l_quantity").alias("sum_qty"),

@@ -6,7 +6,8 @@ window-frame depth, exact quantiles, and higher-order array functions.
 No reference counterpart (the reference is single-stream, SURVEY.md
 §2.3/§2.6); required by the 100 TB north star.  Same scale posture as
 plans.relational: dims and tiny aggregates broadcast, fact joins shuffle
-once on their equi keys, doubles aggregate through decimals.
+once on their equi keys, doubles aggregate exactly on integer units
+(plans.common).
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..sources import load_table, register_temp_views
-from .common import davg, dsum
+from .common import davg, dsum, lsum, revenue_units, units
 from .registry import EVENTS_TS, dsum_sql, query
 
 
@@ -25,11 +26,6 @@ def _t(spark, sf_dir, name):
 
 _REV_SQL = ("CAST(l.l_extendedprice AS DECIMAL(12,2)) "
             "* (1 - CAST(l.l_discount AS DECIMAL(4,2)))")
-
-
-def _rev():
-    return (F.col("l_extendedprice").cast("decimal(12,2)")
-            * (F.lit(1) - F.col("l_discount").cast("decimal(4,2)")))
 
 
 # --- TPC-H shapes --------------------------------------------------------
@@ -92,7 +88,7 @@ def q10_returned_items(spark, sf_dir):
         .join(l, F.col("l_orderkey") == o.o_orderkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(F.sum(_rev()).cast("double").alias("revenue"))
+        .agg(lsum(revenue_units(), 4).cast("double").alias("revenue"))
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
     )
@@ -185,7 +181,7 @@ def q19_disjunctive(spark, sf_dir):
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .filter(cond)
-        .agg(F.sum(_rev()).cast("double").alias("revenue"),
+        .agg(lsum(revenue_units(), 4).cast("double").alias("revenue"),
              F.count("*").alias("n"))
     )
 
@@ -336,8 +332,7 @@ def win_range_frame(spark, sf_dir):
          .rangeBetween(-3_600_000_000, Window.currentRow))
     return ev.select(
         "event_id", "user_id",
-        F.sum(F.col("value").cast("decimal(18,2)")).over(w)
-        .cast("double").alias("rolling_1h"))
+        dsum("value", w=w).alias("rolling_1h"))
 
 
 # --- exact quantiles -----------------------------------------------------
@@ -590,7 +585,7 @@ def q7_volume_shipping(spark, sf_dir):
         .filter(pair)
         .groupBy("supp_nation", "cust_nation",
                  F.year("l_shipdate").cast("int").alias("l_year"))
-        .agg(F.sum(_rev()).cast("double").alias("revenue"))
+        .agg(lsum(revenue_units(), 4).cast("double").alias("revenue"))
     )
 
 
@@ -615,7 +610,7 @@ def q7_volume_shipping(spark, sf_dir):
 """)
 def q8_market_share(spark, sf_dir):
     """TPC-H Q8 shape: one nation's share of a region's part-type
-    revenue per year — conditional-sum over total-sum, decimal until the
+    revenue per year — conditional-sum over total-sum, exact until the
     single double division.  part/supplier/nation/region broadcast; the
     region filter prunes the customer side through the n2->r chain."""
     p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "STANDARD")
@@ -628,9 +623,8 @@ def q8_market_share(spark, sf_dir):
     n2 = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("n2_key"), F.col("n_regionkey").alias("n2_region"))
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    vol = _rev()
-    nat_vol = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(
-        F.lit("0.00").cast("decimal(19,4)"))
+    vol = revenue_units()
+    nat_vol = F.when(F.col("supp_nation") == "NATION_3", vol).otherwise(0)
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -640,7 +634,7 @@ def q8_market_share(spark, sf_dir):
         .join(F.broadcast(n2), c.c_nationkey == F.col("n2_key"))
         .join(F.broadcast(r), F.col("n2_region") == r.r_regionkey)
         .groupBy(F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg((F.sum(nat_vol).cast("double") / F.sum(vol).cast("double"))
+        .agg((lsum(nat_vol, 4).cast("double") / lsum(vol, 4).cast("double"))
              .alias("mkt_share"))
     )
 
@@ -671,7 +665,7 @@ def q15_top_supplier(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp_ntz")))
     revenue = (
         l.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(_rev()).cast("double").alias("total_revenue"))
+        .agg(lsum(revenue_units(), 4).cast("double").alias("total_revenue"))
     )
     w = Window.partitionBy()
     top = (revenue
@@ -813,8 +807,8 @@ def q16_supplier_variety(spark, sf_dir):
 def q9_profit_by_nation(spark, sf_dir):
     """TPC-H Q9 shape: profit (revenue minus cost) per supplier nation
     per year.  No partsupp table in this testdata, so supply cost is
-    modeled as 60% of p_retailprice (rounded to cents in the decimal
-    domain so both engines subtract identical decimals).  part and
+    modeled as 60% of p_retailprice (rounded to cents first, so both
+    engines subtract identical cent amounts).  part and
     supplier broadcast; the LIKE filter prunes parts before the join;
     two fact shuffles.  The 'widget' pattern is
     populated at every scale, so the oracle gate never compares empty
@@ -824,9 +818,8 @@ def q9_profit_by_nation(spark, sf_dir):
     s = _t(spark, sf_dir, "supplier")
     o = _t(spark, sf_dir, "orders")
     n = _t(spark, sf_dir, "nation")
-    cost = F.round(F.lit(0.6) * F.col("p_retailprice"), 2).cast("decimal(12,2)")
-    amount = (_rev()
-              - cost * F.col("l_quantity").cast("decimal(12,2)"))
+    cost = units(F.round(F.lit(0.6) * F.col("p_retailprice"), 2), 2)
+    amount = revenue_units() - cost * units("l_quantity", 2)     # 4dp
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
@@ -834,7 +827,7 @@ def q9_profit_by_nation(spark, sf_dir):
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"),
                  F.year("o_orderdate").cast("int").alias("o_year"))
-        .agg(F.sum(amount).cast("double").alias("sum_profit"))
+        .agg(lsum(amount, 4).cast("double").alias("sum_profit"))
     )
 
 
@@ -876,7 +869,7 @@ def q20_dominant_suppliers(spark, sf_dir):
     )
     part_qty = (
         pair_qty.groupBy(F.col("l_partkey").alias("t_partkey"))
-        .agg(F.sum(F.col("pq").cast("decimal(18,2)")).cast("double").alias("tq"))
+        .agg(dsum("pq").alias("tq"))
     )
     dominant = (
         pair_qty.join(F.broadcast(part_qty),
@@ -924,10 +917,9 @@ def q11_important_parts(spark, sf_dir):
         l.join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy("l_partkey")
-        .agg(F.sum(_rev()).cast("double").alias("value"))
+        .agg(lsum(revenue_units(), 4).cast("double").alias("value"))
     )
-    total = nat_value.agg(
-        F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("tot"))
+    total = nat_value.agg(dsum("value", 4).alias("tot"))
     return (
         nat_value.join(F.broadcast(total))
         .filter(F.col("value") > F.lit(0.001) * F.col("tot"))

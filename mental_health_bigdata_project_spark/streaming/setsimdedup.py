@@ -240,9 +240,12 @@ def compact_setsim_index(spark, index_dir: str, through: int,
                 setsim_prefix_rows(resorted, t)
                 .withColumn("bucket", _bucket(F.col("shingle")))),
             manifest_extra={"dforder_dir": epoch_dir}),
+        # ``resorted`` already holds every live row <= through (both
+        # tables end at ``through`` here), checkpointed apart from the
+        # files this write replaces
         "arrs": compact_index(
             spark, arrs_path, through,
-            transform=lambda live: _resort_arrays(live, dford)),
+            transform=lambda _live: resorted),
     }
     # GC superseded epoch snapshots (readers resolve only the pointer
     # committed above; a crash here leaves harmless litter)
