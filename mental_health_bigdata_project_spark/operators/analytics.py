@@ -47,16 +47,6 @@ def group_stats(df: DataFrame, group_col: str = "subreddit",
     )
 
 
-def group_posts(df: DataFrame, group_col: str = "subreddit",
-                id_col: str = "id") -> DataFrame:
-    """The reference embeds every post inside its group's stats payload
-    (dashboard/app.py:50-55) — an anti-pattern at scale (SURVEY.md §4.1).
-    Kept as a capped, sorted id list."""
-    return df.groupBy(group_col).agg(
-        F.slice(F.array_sort(F.collect_list(id_col)), 1, 100).alias("post_ids")
-    )
-
-
 def histogram(df: DataFrame, risk_col: str = "risk_score") -> DataFrame:
     """Fixed-edge histogram {0-10,10-20,20-30,30+} (dashboard/app.py:62-72).
     Zero-count buckets are preserved by right-joining the literal bucket

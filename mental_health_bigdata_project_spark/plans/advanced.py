@@ -2059,9 +2059,19 @@ def graph_ppr_fixed(spark, sf_dir):
 
 
 def ppr_fixed_from_edges(edges) -> "DataFrame":
-    """The five fixed personalized-PageRank passes over an
-    (src, dst, w) edge relation — shared by the batch query above and
-    the streaming serve path (streaming/graphstate.py)."""
+    """(node, ppr): the personalized-PageRank ranks over an
+    (src, dst, w) edge relation at the 6dp output scale — shared by the
+    batch query above and the streaming serve path
+    (streaming/graphstate.py)."""
+    return ppr_ranks_from_edges(edges).select(
+        "node", F.round("rank", 6).alias("ppr"))
+
+
+def ppr_ranks_from_edges(edges) -> "DataFrame":
+    """(node, rank): the five fixed personalized-PageRank passes,
+    unrounded.  The iteration conserves mass (the ranks sum to 1 up to
+    float error); the 6dp rounding of ``ppr_fixed_from_edges`` can move
+    the sum by up to half a unit in the sixth place per node."""
     edges = edges.localCheckpoint(eager=True)
     nodes = (edges.select(F.col("src").alias("node"))
              .union(edges.select(F.col("dst").alias("node"))).distinct()
@@ -2100,7 +2110,7 @@ def ppr_fixed_from_edges(edges) -> "DataFrame":
                           * F.coalesce(F.col("cs"), F.lit(0.0)))
                          .alias("rank"))
                  .localCheckpoint(eager=True))
-    return ranks.select("node", F.round("rank", 6).alias("ppr"))
+    return ranks
 
 
 def _ppr_multi_oracle_sql() -> str:
@@ -2178,7 +2188,7 @@ def ppr_sparse_ranks(edges: DataFrame, seeds: DataFrame,
     support (grouped by (seed, dst)) plus the dangling rollup; adding
     seeds adds rows to shuffles that already exist instead of
     re-running the walk per seed (seeds-vs-wall measured in
-    scripts/scaleup_ppr.py / SCALING.md).  At web scale the support
+    SCALING.md §17).  At web scale the support
     after k passes is the k-hop out-neighborhood per seed — the
     related-items working set — not V^2."""
     outdeg = edges.groupBy("src").agg(F.sum("w").alias("outw"))

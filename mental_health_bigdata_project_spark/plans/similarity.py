@@ -1407,8 +1407,8 @@ def dedup_cluster_components(spark, sf_dir):
 
 
 # pass count of the most recent _min_label_components run — observability
-# for the scale-up harness (scripts/scaleup_dedup_chain.py): convergence
-# passes ~ component diameter, the quantity the 100 TB claim rests on.
+# for scale-up measurements (SCALING.md §1): convergence passes ~
+# component diameter, the quantity the 100 TB claim rests on.
 LAST_PROPAGATION_PASSES: int = 0
 
 
@@ -2327,8 +2327,8 @@ def dedup_semdedup(spark, sf_dir, bits=None):
     e = _emb(spark, sf_dir)
 
     # bits defaults to _SEM_BITS (the oracle-checked setting); the 10x
-    # scale-up harness (scripts/scaleup_semdedup.py) passes bits+4 to
-    # measure the raise-the-bits knob the docstring prescribes
+    # scale-up run (SCALING.md §6) passed bits+4 to measure the
+    # raise-the-bits knob the docstring prescribes
     def build_cosc():
         v = e.select("vec_id", to_double_array("embedding").alias("emb"),
                      embedding_cell_expr("embedding",

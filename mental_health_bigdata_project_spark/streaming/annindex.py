@@ -149,7 +149,10 @@ def delete_batch(spark, ids_df: DataFrame, batch_id: int,
 
     Contract: deletes apply to data ingested at or below the horizon
     taken when the delete is processed; an ingest batch racing the
-    delete with a smaller-or-equal batch_id is covered by it."""
+    delete with a smaller-or-equal batch_id is covered by it.  Deletes
+    and compaction must not run concurrently: nothing here locks
+    against a compaction, and a delete racing one can see the
+    codes/vecs manifests swap mid-join and under-subtract."""
     tombs_path = _p(index_dir, "tombs")
     own_dir = os.path.join(tombs_path, f"batch_id={batch_id}")
     if os.path.isdir(own_dir):  # replay of a committed delete: no-op
@@ -300,19 +303,6 @@ def run_incremental_ann(stream: DataFrame, checkpoint_dir: str,
     (vec_id, embedding) rows and drain available input."""
     return run_available_now(stream, checkpoint_dir, lambda df, bid: (
         index_batch(df, bid, index_dir)))
-
-
-def run_ann_deletes(stream: DataFrame, checkpoint_dir: str,
-                    index_dir: str):
-    """Attach the tombstone-delete sink to a stream of (vec_id) rows
-    and drain available input.  Independent checkpoint (and therefore
-    batch counter) from the ingest stream; the tombstone horizon ties
-    the two together.  Run deletes and compaction mutually exclusive —
-    a delete racing a compaction can see the codes/vecs manifests swap
-    mid-join and under-subtract (the usual offline-maintenance
-    contract, stated here because this sink READS the index)."""
-    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
-        delete_batch(df.sparkSession, df, bid, index_dir)))
 
 
 def compact_ann_index(spark, index_dir: str, through: int,

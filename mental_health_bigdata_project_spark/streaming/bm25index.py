@@ -100,7 +100,11 @@ def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
     not yet committed): without it, a replay after such a purge would
     find no doclen rows for its ids and overwrite its stats_neg
     partition with zero partials — silently undoing the deletion in
-    served N/avgdl while the positive stats still count the docs."""
+    served N/avgdl while the positive stats still count the docs.
+
+    Deletes and compaction must not run concurrently: nothing here
+    locks against a compaction, and a delete racing one can read
+    doclen while its manifest swaps and under-subtract."""
     own_dir = os.path.join(index_dir, "tombs", f"batch_id={batch_id}")
     if os.path.isdir(own_dir):
         return
@@ -126,15 +130,6 @@ def delete_docs_batch(spark, ids_df: DataFrame, batch_id: int,
                 batch_id, os.path.join(index_dir, "stats_neg"))
     write_delta(ids, batch_id,
                 os.path.join(index_dir, "tombs"))  # the commit point
-
-
-def run_bm25_deletes(stream: DataFrame, checkpoint_dir: str,
-                     index_dir: str):
-    """Attach the tombstone-delete sink to a (doc_id) stream and drain
-    available input.  Run deletes and compaction mutually exclusive
-    (the annindex.py contract — this sink reads the index)."""
-    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
-        delete_docs_batch(df.sparkSession, df, bid, index_dir)))
 
 
 def bm25_query(spark, index_dir: str,

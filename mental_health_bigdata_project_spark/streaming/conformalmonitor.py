@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.quality import (conformal_cell, conformal_fit,
                              conformal_marginal_qhat)
-from .compaction import (compact_index, read_state, run_available_now,
-                         write_delta)
+from .compaction import compact_index, read_state, write_delta
 
 COVERAGE_ALARM = 0.85   # nominal 0.9 minus slack for sampling noise
 
@@ -122,10 +121,3 @@ def compact_coverage_state(spark: SparkSession, index_dir: str,
     per group forever."""
     return compact_index(spark, os.path.join(index_dir, "coverage"),
                          through, transform=_fold)
-
-
-def run_coverage_monitor(stream: DataFrame, checkpoint_dir: str,
-                         index_dir: str, artifact_dir: str):
-    """Attach the coverage sink to an events stream (availableNow)."""
-    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
-        coverage_batch(df, bid, index_dir, artifact_dir)))

@@ -33,8 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.quality import (psi_bucketize, psi_decile_boundaries,
                              psi_from_bucket_counts, psi_quantize)
-from .compaction import (compact_index, read_state, run_available_now,
-                         write_delta)
+from .compaction import compact_index, read_state, write_delta
 
 
 def _fold(live: DataFrame) -> DataFrame:
@@ -102,11 +101,3 @@ def compact_drift_state(spark: SparkSession, index_dir: str,
     committed batch — the store stays #types x 10 rows forever."""
     return compact_index(spark, os.path.join(index_dir, "buckets"),
                          through, transform=_fold)
-
-
-def run_drift_gate(stream: DataFrame, checkpoint_dir: str,
-                   index_dir: str, artifact_dir: str):
-    """Attach the drift-state sink to an events stream and drain
-    available input (availableNow, the family's test runner shape)."""
-    return run_available_now(stream, checkpoint_dir, lambda df, bid: (
-        drift_batch(df, bid, index_dir, artifact_dir)))

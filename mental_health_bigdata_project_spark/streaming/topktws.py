@@ -131,8 +131,8 @@ def topk_tokens_tws(tokens: DataFrame, k: int = 20,
     them is configured: under ProcessingTime an availableNow drain
     keeps scheduling EMPTY micro-batches after the input is exhausted
     (~100 observed, each paying the full per-partition state-store
-    commit overhead — measured as the dominant wall in
-    scripts/compare_state_archs.py before this guard).  The state
+    commit overhead — measured as the dominant wall before this guard,
+    SCALING.md §15).  The state
     store must be the RocksDB provider (per-state column families) —
     see the parity test for the session conf."""
     time_mode = ("ProcessingTime" if (ttl_ms or idle_timer_ms)

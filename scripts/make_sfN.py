@@ -4,10 +4,11 @@ at-scale rewrites need a bigger corpus to show data-bound behavior).
 
 Fact tables are replicated FACTOR times with shifted keys (disjoint id
 spaces per copy; documents additionally get a per-copy token suffix so
-copies share no shingles — the scaleup_* scripts' construction, which
-makes dedup/text structure scale exactly linearly).  Dimension tables
-(region/nation/customer/supplier/part) are copied unchanged, so join
-fan-in per dim row grows by FACTOR — the realistic direction at scale.
+copies share no shingles — the construction of SCALING.md's scale-up
+runs, which makes dedup/text structure scale exactly linearly).
+Dimension tables (region/nation/customer/supplier/part) are copied
+unchanged, so join fan-in per dim row grows by FACTOR — the realistic
+direction at scale.
 
 Usage: python scripts/make_sfN.py <base_sf_dir> <out_dir> [factor=10]
 The output dir is NOT registered testdata: it exists for profiling
@@ -20,7 +21,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:

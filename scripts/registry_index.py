@@ -1,19 +1,25 @@
 """Generate REGISTRY.md: one row per registered query id — defining
-module:line, oracle-backed or rows-only — so the full surface is
-navigable without grepping.  Re-run after adding queries:
+module, oracle-backed or rows-only — so the full surface is navigable
+without grepping.  Re-run after adding or editing queries:
 
     python scripts/registry_index.py
+
+``tests/test_queries_registry.py`` fails while the committed file
+differs from ``render()``.
 """
 
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
-def main() -> None:
+def render() -> str:
+    """REGISTRY.md's full text for the live registry."""
     from mental_health_bigdata_project_spark.plans import ORACLES, QUERIES
 
     rows = []
@@ -21,13 +27,9 @@ def main() -> None:
         target = inspect.unwrap(fn)
         mod = target.__module__.replace(
             "mental_health_bigdata_project_spark.", "")
-        try:
-            line = inspect.getsourcelines(target)[1]
-        except OSError:
-            line = 0
         doc = " ".join(
             (inspect.getdoc(target) or "").split("\n\n")[0].split())
-        rows.append((qid, f"{mod.replace('.', '/')}.py:{line}",
+        rows.append((qid, f"{mod.replace('.', '/')}.py",
                      "oracle" if qid in ORACLES else "rows-only", doc))
 
     rows.sort()
@@ -47,9 +49,13 @@ def main() -> None:
     for qid, loc, check, doc in rows:
         doc = doc.replace("|", "\\|")
         out.append(f"| `{qid}` | `{loc}` | {check} | {doc} |")
-    with open("/root/repo/REGISTRY.md", "w") as fh:
-        fh.write("\n".join(out) + "\n")
-    print(f"wrote REGISTRY.md ({len(rows)} rows)")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    with open(os.path.join(ROOT, "REGISTRY.md"), "w") as fh:
+        fh.write(render())
+    print("wrote REGISTRY.md")
 
 
 if __name__ == "__main__":

@@ -16,11 +16,12 @@ Prints one JSON line with rows/sec for both paths.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEYWORDS = [
     "suicide", "kill myself", "end it all", "no reason to live",

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import glob
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -22,3 +24,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def python_sources(subdirs, files):
+    """The ``.py`` files under ``subdirs`` and the named top-level
+    ``files``, all relative to the repo root — what the AST guards
+    scan."""
+    for sub in subdirs:
+        yield from glob.glob(os.path.join(ROOT, sub, "**", "*.py"),
+                             recursive=True)
+    for f in files:
+        yield os.path.join(ROOT, f)

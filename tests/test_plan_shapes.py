@@ -1,9 +1,9 @@
-"""Plan-shape regression guard: the scale properties PLANS.md audits
-— no single-partition exchanges, no sort-merge joins — enforced for
-the north-star operators so a refactor cannot silently reintroduce a
-global sort or an unbroadcast big join.  Runs the FINAL (AQE) plan at
-sf0.001, so it is cheap; the full 65-headliner audit lives in
-PLANS.md via scripts/plan_report.py."""
+"""Plan-shape regression guard: no single-partition exchanges, no
+sort-merge joins — enforced for the north-star operators so a refactor
+cannot silently reintroduce a global sort or an unbroadcast big join.
+Runs the FINAL (AQE) plan at sf0.001, so it is cheap.  Any other
+query's plan prints on demand with ``explain()``, or to
+``plans/dumps/`` via ``scripts/dump_plans.py``."""
 
 from __future__ import annotations
 

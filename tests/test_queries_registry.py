@@ -4,9 +4,12 @@ value-parity against DuckDB is scripts/check_oracles.py / the driver.)"""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entry_mod
+from conftest import ROOT
 
 
 def test_oracles_subset_of_queries():
@@ -133,7 +136,7 @@ def test_coverage_md_check_column_matches_registry():
 
     mismatches = []
     in_ledger = False
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
         for lineno, line in enumerate(f, 1):
             if line.startswith("#"):
                 # the rows-only ledger's last column NAMES sibling
@@ -178,7 +181,7 @@ def test_coverage_rows_only_ledger_complete_and_consistent():
     rows_only = {q for q in QUERIES if q not in ORACLES}
     listed, bad_siblings = set(), []
     in_ledger = False
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
         for line in f:
             if line.startswith("#"):
                 in_ledger = line.startswith("## Rows-only ledger")
@@ -253,20 +256,20 @@ def test_doc_count_claims_match_registry():
     n_q, n_o = len(QUERIES), len(ORACLES)
     problems = []
 
-    with open("/root/repo/README.md") as f:
+    with open(os.path.join(ROOT, "README.md")) as f:
         m = re.search(r"the query registry: (\d+) queries, (\d+) with",
                       f.read())
     if m and (int(m.group(1)), int(m.group(2))) != (n_q, n_o):
         problems.append(f"README.md claims {m.groups()}, registry is "
                         f"({n_q}, {n_o})")
 
-    with open("/root/repo/REGISTRY.md") as f:
+    with open(os.path.join(ROOT, "REGISTRY.md")) as f:
         m = re.search(r"(\d+) queries, (\d+) oracle-backed", f.read())
     if m and (int(m.group(1)), int(m.group(2))) != (n_q, n_o):
         problems.append(f"REGISTRY.md claims {m.groups()}, registry is "
                         f"({n_q}, {n_o})")
 
-    with open("/root/repo/COVERAGE.md") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md")) as f:
         claims = re.findall(r"registry is now (\d+) queries /\s*(\d+)",
                             f.read())
     if claims and (int(claims[-1][0]), int(claims[-1][1])) != (n_q, n_o):
@@ -280,17 +283,29 @@ def test_readme_and_architecture_counts_match_registry():
     """README's "N queries, M with DuckDB oracle twins" and
     ARCHITECTURE's "M of N queries" must both be present and equal the
     registry's sizes."""
-    import os
     import re
 
     from mental_health_bigdata_project_spark.plans import ORACLES, QUERIES
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(root, "README.md")) as f:
+    with open(os.path.join(ROOT, "README.md")) as f:
         readme = re.search(r"(\d+) queries, (\d+) with DuckDB oracle twins",
                            f.read())
-    with open(os.path.join(root, "ARCHITECTURE.md")) as f:
+    with open(os.path.join(ROOT, "ARCHITECTURE.md")) as f:
         arch = re.search(r"(\d+) of (\d+) queries", f.read())
     assert readme and arch
     assert (int(readme[1]), int(readme[2])) == (len(QUERIES), len(ORACLES))
     assert (int(arch[2]), int(arch[1])) == (len(QUERIES), len(ORACLES))
+
+
+def test_registry_md_is_current():
+    """REGISTRY.md is generated: the committed file must equal what
+    ``scripts/registry_index.py`` renders from the live registry, so an
+    added query or an edited summary line cannot leave it stale.  Rows
+    cite the defining module without a line number, so moving code
+    inside a module does not touch the file."""
+    from scripts.registry_index import render
+
+    with open(os.path.join(ROOT, "REGISTRY.md")) as f:
+        committed = f.read()
+    assert committed == render(), (
+        "REGISTRY.md is stale: run python scripts/registry_index.py")

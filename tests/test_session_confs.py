@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import ast
 import functools
-import glob
 import os
 import subprocess
 import sys
@@ -16,10 +15,10 @@ import pytest
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 import __spark_entry__ as entry_mod
+from conftest import ROOT, python_sources
 from mental_health_bigdata_project_spark.session import (
     CODEGEN_CACHE_ENTRIES, CONFS, configure, ensure_runtime_confs)
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "mental_health_bigdata_project_spark")
 SESSION_PY = os.path.join(PACKAGE, "session.py")
 PARTITIONS = "spark.sql.shuffle.partitions"
@@ -122,14 +121,6 @@ def test_warm_query_compiles_nothing_after_filler(spark, sf_dir):
     assert run_q1() == 0
 
 
-def _sources(subdirs, files):
-    for sub in subdirs:
-        yield from glob.glob(os.path.join(ROOT, sub, "**", "*.py"),
-                             recursive=True)
-    for f in files:
-        yield os.path.join(ROOT, f)
-
-
 def _str_arg(call: ast.Call) -> str | None:
     if call.args and isinstance(call.args[0], ast.Constant):
         return call.args[0].value
@@ -141,8 +132,9 @@ def test_session_py_is_the_only_partition_writer():
     ``conf.set("spark.sql.shuffle.partitions", ...)`` outside session.py,
     and no package module but session.py reads ``SPARK_GRAFT_CPUS``."""
     writers = []
-    for path in _sources(["mental_health_bigdata_project_spark", "scripts",
-                          "tests"], ["__spark_entry__.py", "bench.py"]):
+    for path in python_sources(
+            ["mental_health_bigdata_project_spark", "scripts", "tests"],
+            ["__spark_entry__.py", "bench.py"]):
         if path == SESSION_PY:
             continue
         for node in ast.walk(ast.parse(open(path).read())):
@@ -158,7 +150,7 @@ def test_session_py_is_the_only_partition_writer():
     assert not writers, writers
 
     readers = []
-    for path in _sources(["mental_health_bigdata_project_spark"], []):
+    for path in python_sources(["mental_health_bigdata_project_spark"], []):
         if path == SESSION_PY:
             continue
         for node in ast.walk(ast.parse(open(path).read())):
