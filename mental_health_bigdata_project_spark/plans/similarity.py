@@ -946,9 +946,11 @@ def portable_minhash_sigs(df: DataFrame, id_col: str,
                           text_col: str) -> DataFrame:
     """(id, m0..m15) md5-family minhash signatures over token 3-gram
     shingles — the engine-portable family shared by the batch dedup
-    queries and the incremental/streaming near-dedup
-    (streaming/neardup.py).  Pure built-in expressions, so it works
-    unchanged on batch and streaming DataFrames."""
+    queries, the incremental/streaming near-dedup
+    (streaming/neardup.py) and, keyed by a group column instead of a
+    doc id, the per-group signature state (streaming/minhashstate.py).
+    Pure built-in expressions, so it works unchanged on batch and
+    streaming DataFrames."""
     d = df.select(F.col(id_col), tokens_col(text_col).alias("toks"))
     shingles = F.when(
         F.size("toks") >= 3,

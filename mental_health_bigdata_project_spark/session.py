@@ -20,8 +20,10 @@ applies the same table to a live session (a caller of
 ``__spark_entry__`` hands over its own plain one) and sets the partition
 count, sized to the input data when the query's ``sf_dir`` is given.
 
-Two confs are static, so only ``configure`` can set them: Kryo, and the
-size of Spark's JVM-wide generated-class cache
+Three confs are static, so only ``configure`` can set them: Kryo, the
+console progress bar (off: it ends in a carriage return and shares a
+line with whatever a script prints next when stdout and stderr go to
+one file), and the size of Spark's JVM-wide generated-class cache
 (``spark.sql.codegen.cache.maxEntries``, ``CODEGEN_CACHE_ENTRIES``).
 Spark's default of 100 classes is below this engine's working set: one
 round of the perfbench ``queries`` workload (three registry queries)
@@ -88,10 +90,10 @@ def _input_bytes(sf_dir: str) -> int:
 
 
 def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
-    """Apply ``CONFS`` (plus the static Kryo and codegen-cache confs,
-    which only a builder can set) to any builder.  The partition count
-    is set here only when given; otherwise ``ensure_runtime_confs`` sets
-    it once the context exists."""
+    """Apply ``CONFS`` (plus the static Kryo, console-progress and
+    codegen-cache confs, which only a builder can set) to any builder.
+    The partition count is set here only when given; otherwise
+    ``ensure_runtime_confs`` sets it once the context exists."""
     for k, v in CONFS.items():
         builder = builder.config(k, v)
     if shuffle_partitions is not None:
@@ -99,6 +101,7 @@ def configure(builder: SparkSession.Builder, shuffle_partitions: int | None = No
     return (builder
             .config("spark.executorEnv.PYTHONPATH", PACKAGE_PARENT)
             .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+            .config("spark.ui.showConsoleProgress", "false")
             .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)))
 
 

@@ -251,8 +251,7 @@ def _check_through(table_path: str, through: int) -> int:
 def compact_index(spark, table_path: str, through: int,
                   partition_by: list[str] | None = None,
                   transform=None,
-                  transform_keeps_batch: bool = False,
-                  manifest_extra: dict | None = None) -> dict:
+                  transform_keeps_batch: bool = False) -> dict:
     """Consolidate every live row with batch_id <= ``through`` into a
     new ``_compacted_v{k}`` store, commit the manifest, then garbage-
     collect superseded delta partitions and older compacted versions.
@@ -270,12 +269,7 @@ def compact_index(spark, table_path: str, through: int,
     "row batch <= tombstone horizon"); the output's batch_id is still
     rewritten to ``through``.  Re-compaction is
     supported: the previous compacted store (batch_id = old through <=
-    new through) folds into the new one.  ``manifest_extra`` merges
-    caller-owned keys into the committed manifest ATOMICALLY with the
-    store flip (the setsim epoch pointer rides this: the prefix store's
-    element order and the pointer to that order must never be readable
-    separately).
-    Returns the new manifest."""
+    new through) folds into the new one.  Returns the new manifest."""
     _check_through(table_path, through)
     m = load_manifest(table_path)
     version = (m["version"] + 1) if m else 1
@@ -305,8 +299,6 @@ def compact_index(spark, table_path: str, through: int,
     writer.parquet(os.path.join(table_path, dest_name))
 
     manifest = {"version": version, "dir": dest_name, "through": through}
-    if manifest_extra:
-        manifest.update(manifest_extra)
     tmp = _manifest_path(table_path) + ".tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)

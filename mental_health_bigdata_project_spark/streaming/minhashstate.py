@@ -5,9 +5,9 @@ topkstate by ADDITION; this merges signatures by MIN).
 
 Each micro-batch reduces to one 16-value signature row per group: the
 per-(group, s) minimum of ``md5(md5(shingle) || '-s')`` over the
-batch's token 3-gram shingles — the exact hash family of
-``plans/similarity.portable_minhash_sigs``, so the folded stream state
-is BY CONSTRUCTION the signature the batch pipeline computes over the
+batch's token 3-gram shingles: ``plans/similarity.portable_minhash_sigs``
+keyed by group instead of doc.  So the folded stream state is BY
+CONSTRUCTION the signature the batch pipeline computes over the
 ingested union: min over batches of per-batch minima == min over the
 union (min is associative AND commutative AND idempotent).
 
@@ -33,8 +33,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.similarity import N_MINHASH
-from ..plans.textops import tokens_col
+from ..plans.similarity import N_MINHASH, portable_minhash_sigs
 from .compaction import (compact_index, read_state, run_available_now,
                          write_delta)
 
@@ -51,37 +50,11 @@ def _fold(live: DataFrame) -> DataFrame:
     return live.groupBy(*grp).agg(*[F.min(c).alias(c) for c in _SIG_COLS])
 
 
-def group_minhash_sigs(docs: DataFrame, group_col: str = "source",
-                       text_col: str = "text") -> DataFrame:
-    """(group, m0..m15) — the portable md5-family minhash signature of
-    the UNION of token 3-gram shingle sets of the group's docs.  The
-    per-shingle hash chain is identical to
-    plans/similarity.portable_minhash_sigs; grouping by source instead
-    of doc_id is the only difference, so per-doc and per-group
-    signatures share one vocabulary of hash values."""
-    d = docs.select(F.col(group_col), tokens_col(text_col).alias("toks"))
-    shingles = F.when(
-        F.size("toks") >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size("toks") - 2),
-            lambda i: F.concat_ws(" ", F.element_at("toks", i),
-                                  F.element_at("toks", i + 1),
-                                  F.element_at("toks", i + 2))),
-    ).otherwise(F.array().cast("array<string>"))
-    hs = (d.select(group_col,
-                   F.explode(F.array_distinct(shingles)).alias("shingle"))
-          .select(group_col, F.md5("shingle").alias("h")))
-    return hs.groupBy(group_col).agg(*[
-        F.min(F.md5(F.concat(F.col("h"), F.lit(f"-{s}")))).alias(f"m{s}")
-        for s in range(N_MINHASH)
-    ])
-
-
 def minhash_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
                   group_col: str = "source") -> None:
     """One micro-batch of signature maintenance (the foreachBatch
     body): one 16-hash row per group seen in the batch."""
-    write_delta(group_minhash_sigs(batch_df, group_col), batch_id,
+    write_delta(portable_minhash_sigs(batch_df, group_col, "text"), batch_id,
                 _sigs_path(index_dir))
 
 

@@ -13,12 +13,12 @@ Design (foreachBatch + two persisted index tables, NOT per-row state):
   rarest-first by corpus document frequency — the best-pruning order,
   but df DRIFTS as a stream grows, and a prefix index written under
   yesterday's order would be unsound against today's.  Prefix
-  filtering is lossless under ANY fixed total order, so the streaming
-  index starts in md5(shingle) order — content-defined, data-independent
-  pruning (a random permutation) instead of optimal — and each
-  full-horizon ``compact_setsim_index`` re-sorts it rarest-first by df,
-  committing the new order atomically with the index (one order per
-  epoch).  The positional and size bounds apply unchanged.
+  filtering is exact under ANY fixed total order, so the streaming
+  store keeps one content-defined order, (md5(shingle), shingle), for
+  its whole life: data-independent pruning (a random permutation)
+  instead of optimal, and compaction never re-sorts.  A store whose
+  prefix rows an earlier layout re-sorted by document frequency is
+  refused before any write; rebuild it by replaying its source.
 - **Index tables** under ``index_dir``: ``prefix`` rows
   (shingle, doc_id, p, sz) — one row per PREFIX element of each
   accepted doc (~(1-t)·|s|+1 of them), the candidate-probe side,
@@ -62,17 +62,14 @@ chains via dedup_cluster_components.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..plans.textops import (setsim_candidates_between, setsim_prefix_rows,
                              setsim_shingles, setsim_verify_pairs, tokens_col)
 from .compaction import (_check_through, compact_index, load_manifest,
-                         read_index, read_live, run_available_now,
-                         write_delta)
+                         read_index, run_available_now, write_delta)
 
 _T = 0.5
 N_BUCKETS = 16          # shingle-hash partitions of the prefix index
@@ -91,169 +88,49 @@ def _arrs_path(index_dir: str) -> str:
     return os.path.join(index_dir, "arrs")
 
 
-def _dforder_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "dforder")
-
-
-def _load_dforder(spark, index_dir: str) -> DataFrame | None:
-    """The current epoch's (shingle, dfreq) order snapshot, or None for
-    a store that has never been re-sorted (md5 order).  The POINTER
-    lives in the prefix store's compaction manifest (``dforder_dir``),
-    committed atomically with the re-sorted prefix rows — a reader can
-    never observe the order and the store separately."""
-    m = load_manifest(_prefix_path(index_dir))
-    if not m or "dforder_dir" not in m:
-        return None
-    return spark.read.parquet(
-        os.path.join(_dforder_path(index_dir), m["dforder_dir"]))
+def _refuse_resorted(index_dir: str) -> None:
+    """Raise before any write when the store's prefix rows were
+    re-sorted by document frequency (an earlier layout): probing them
+    in md5 order would silently miss duplicates."""
+    if "dforder_dir" in (load_manifest(_prefix_path(index_dir)) or {}):
+        raise ValueError(
+            f"setsim store {index_dir} was re-sorted by document "
+            f"frequency under an earlier layout; rebuild it by replaying "
+            f"its source")
 
 
 def setsim_arrays(df: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text",
-                  dforder: DataFrame | None = None) -> DataFrame:
-    """(id, arr, sz): per-doc element arrays sorted in the store's
-    current EPOCH order — (document frequency, md5(shingle), shingle)
-    ascending, with df defaulting to 0 for shingles absent from the
-    epoch's df snapshot.  With no snapshot (``dforder=None``, the
-    pre-epoch store state) every df is 0 and the order reduces
-    EXACTLY to the original fixed md5-content order, so a store never
-    re-sorted behaves bit-identically.  With a snapshot (written by
-    ``compact_setsim_index``'s re-sort), rare shingles sort into the
-    prefix — the batch twin's rarest-first pruning order — and unseen
-    (hence rare) shingles sort first by construction.  Docs with no
+                  text_col: str = "text") -> DataFrame:
+    """(id, arr, sz): per-doc element arrays sorted in the store's one
+    fixed order, (md5(shingle), shingle) ascending.  Docs with no
     shingles (<3 tokens) produce no row."""
     d = df.select(F.col(id_col).alias("doc_id"),
                   tokens_col(text_col).alias("toks"))
-    sh = setsim_shingles(d)
-    return _arrays_from_shingles(sh, dforder)
-
-
-def _arrays_from_shingles(sh: DataFrame,
-                          dforder: DataFrame | None,
-                          key_col: str = "doc_id") -> DataFrame:
-    """(key, arr, sz) from a (key, shingle) relation under the epoch
-    order (df, md5, shingle); df coalesces to 0 when ``dforder`` is
-    None or misses the shingle."""
-    if dforder is not None:
-        sh = sh.join(
-            dforder.select("shingle", F.col("dfreq").alias("_dfreq")),
-            "shingle", "left")
-        dkey = F.coalesce(F.col("_dfreq"), F.lit(0).cast("bigint"))
-    else:
-        dkey = F.lit(0).cast("bigint")
-    return (sh.groupBy(key_col)
+    return (setsim_shingles(d).groupBy("doc_id")
             .agg(F.transform(
                 F.sort_array(F.collect_list(
-                    F.struct(dkey.alias("d"),
-                             F.md5("shingle").alias("h"),
+                    F.struct(F.md5("shingle").alias("h"),
                              F.col("shingle")))),
                 lambda s: s["shingle"]).alias("arr"))
             .withColumn("sz", F.size("arr")))
 
 
-def _resort_arrays(arrs: DataFrame, dforder: DataFrame) -> DataFrame:
-    """Re-sort every (doc_id, arr, sz) row's elements under the given
-    df order.  Rows are keyed by a transient surrogate id, NOT doc_id —
-    the log-structured contract allows the same doc_id accepted twice
-    with different content, and a doc_id regroup would merge them."""
-    # pin BEFORE branching: monotonically_increasing_id is
-    # nondeterministic across re-executions, and the two consumers
-    # below would otherwise re-derive different rids
-    keyed = (arrs.withColumn("_rid", F.monotonically_increasing_id())
-             .localCheckpoint(eager=True))
-    sh = keyed.select("_rid", F.explode("arr").alias("shingle"))
-    resorted = _arrays_from_shingles(sh, dforder, key_col="_rid")
-    return (keyed.select("_rid", "doc_id")
-            .join(resorted, "_rid")
-            .select("doc_id", "arr", "sz"))
-
-
-def compact_setsim_index(spark, index_dir: str, through: int,
-                         t: float = _T, reorder: bool = True) -> dict:
+def compact_setsim_index(spark, index_dir: str, through: int) -> dict:
     """Compact both setsim index tables through ``through``.
 
     The prefix store MUST keep ``partition_by=["bucket"]`` (the probe's
     partition pruning); this helper exists so callers can't forget it.
-
-    **Epoch re-sort (r11, VERDICT r10 item 4)**: when ``through`` is
-    the NEWEST live batch of both tables (no surviving deltas — the
-    normal offline-compaction case, and the only one where the whole
-    index can change order atomically), the element order is re-sorted
-    RAREST-FIRST by document frequency over the compacted corpus — the
-    batch twin's optimal pruning order, vs the md5 order whose
-    candidate count grows with the aging index.  Soundness across the
-    flip: prefix filtering is lossless under any SINGLE total order,
-    so the commit protocol keeps order and store inseparable —
-
-    1. the (shingle, dfreq) snapshot dir is written (invisible: no
-       pointer yet);
-    2. the prefix store is REBUILT from the re-sorted arrays and its
-       manifest — carrying the ``dforder_dir`` pointer — is committed
-       atomically (``os.replace``): probes flip from (old rows, old
-       order) to (new rows, new order) in one step;
-    3. the arrs store is rewritten re-sorted.  A crash between 2 and 3
-       is benign: verification reads arrays order-independently
-       (``array_intersect`` + sizes), and the next compaction re-sorts
-       whatever remained.
-
-    ``t`` must equal the stream's threshold (prefix lengths depend on
-    it).  With surviving deltas above ``through`` (or
-    ``reorder=False``) the store compacts under its CURRENT order and
-    keeps its existing epoch pointer — deltas written under the old
-    order stay sound against it.  ``through`` is validated against
-    BOTH tables before anything is written, so a rejected horizon
-    leaves no snapshot behind."""
+    ``through`` is validated against BOTH tables before anything is
+    written, so a rejected horizon leaves the store unchanged."""
+    _refuse_resorted(index_dir)
     prefix_path, arrs_path = _prefix_path(index_dir), _arrs_path(index_dir)
-    prev = load_manifest(prefix_path) or {}
-    newest = [_check_through(p, through) for p in (prefix_path, arrs_path)]
-    can_reorder = reorder and all(n == through for n in newest)
-    if not can_reorder:
-        extra = ({"dforder_dir": prev["dforder_dir"]}
-                 if "dforder_dir" in prev else None)
-        return {
-            "prefix": compact_index(
-                spark, prefix_path, through,
-                partition_by=["bucket"], manifest_extra=extra),
-            "arrs": compact_index(spark, arrs_path, through),
-        }
-
-    # --- epoch re-sort path ---
-    arrs_live = read_live(spark, arrs_path).filter(
-        F.col("batch_id") <= F.lit(through)).select("doc_id", "arr", "sz")
-    epoch_dir = f"epoch_v{prev.get('version', 0) + 1}"
-    dford_out = os.path.join(_dforder_path(index_dir), epoch_dir)
-    (arrs_live.select(F.explode("arr").alias("shingle"))
-     .groupBy("shingle")
-     .agg(F.count("*").cast("bigint").alias("dfreq"))
-     .coalesce(max(1, N_BUCKETS // 4))
-     .write.mode("overwrite").parquet(dford_out))
-    dford = spark.read.parquet(dford_out)
-
-    resorted = _resort_arrays(arrs_live, dford).localCheckpoint(eager=True)
-    out = {
-        "prefix": compact_index(
-            spark, prefix_path, through,
-            partition_by=["bucket"],
-            # the old prefix rows' POSITIONS are wrong under the new
-            # order: rebuild the whole store from the re-sorted arrays
-            transform=lambda _live: (
-                setsim_prefix_rows(resorted, t)
-                .withColumn("bucket", _bucket(F.col("shingle")))),
-            manifest_extra={"dforder_dir": epoch_dir}),
-        # ``resorted`` already holds every live row <= through (both
-        # tables end at ``through`` here), checkpointed apart from the
-        # files this write replaces
-        "arrs": compact_index(
-            spark, arrs_path, through,
-            transform=lambda _live: resorted),
+    for p in (prefix_path, arrs_path):
+        _check_through(p, through)
+    return {
+        "prefix": compact_index(spark, prefix_path, through,
+                                partition_by=["bucket"]),
+        "arrs": compact_index(spark, arrs_path, through),
     }
-    # GC superseded epoch snapshots (readers resolve only the pointer
-    # committed above; a crash here leaves harmless litter)
-    for d in glob.glob(os.path.join(_dforder_path(index_dir), "epoch_v*")):
-        if os.path.basename(d) != epoch_dir:
-            shutil.rmtree(d, ignore_errors=True)
-    out["dforder"] = {"dir": epoch_dir}
-    return out
 
 
 def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
@@ -263,15 +140,11 @@ def dedup_setsim_batch_against_index(batch_df: DataFrame, batch_id: int,
                                      t: float = _T) -> None:
     """One micro-batch of incremental exact setsim dedup (the
     foreachBatch body, callable directly for tests / backfills)."""
+    _refuse_resorted(index_dir)
     spark = batch_df.sparkSession
-    # the store's current element-order epoch (None = md5 order): the
-    # batch MUST sort its arrays under the same total order the index
-    # was written in or prefix filtering loses its no-false-negative
-    # guarantee (see compact_setsim_index's re-sort commit protocol)
-    dforder = _load_dforder(spark, index_dir)
     # the shingle->sort pipeline feeds the prefix probe, both index
     # deltas, and the verify joins — materialize once
-    arrs = setsim_arrays(batch_df, id_col, text_col, dforder=dforder) \
+    arrs = setsim_arrays(batch_df, id_col, text_col) \
         .localCheckpoint(eager=True)
     # feeds the prior probe AND the touched-bucket collect below
     pre = setsim_prefix_rows(arrs, t).localCheckpoint(eager=True)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import ast
 import glob
+import json
 import os
 
 import pytest
@@ -131,18 +132,26 @@ def test_replay_and_compaction_leave_served_state_unchanged(
     assert _rows(serve(spark, idx, art)) == want
 
 
-def test_setsim_rejected_horizon_leaves_no_snapshot(spark, tmp_path):
-    """A horizon above the newest batch is refused BEFORE the epoch
-    re-sort writes its df-order snapshot."""
+def _tree(root) -> list[tuple[str, int, int]]:
+    """Every path under ``root`` with its size and modification time."""
+    return sorted((p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
+                  for p in glob.glob(f"{root}/**", recursive=True))
+
+
+def test_setsim_rejected_horizon_leaves_the_store_unchanged(
+        spark, tmp_path):
+    """A horizon above the newest batch is refused before either index
+    table is written."""
     idx = str(tmp_path / "idx")
     docs = spark.createDataFrame(
         [(i, f"t{i} shared words in every doc x{i % 3}") for i in range(8)],
         "doc_id bigint, text string")
     setsimdedup.dedup_setsim_batch_against_index(
         docs, 0, str(tmp_path / "out"), idx)
+    before = _tree(tmp_path)
     with pytest.raises(ValueError, match="exceeds newest live batch"):
         setsimdedup.compact_setsim_index(spark, idx, through=1)
-    assert not glob.glob(os.path.join(idx, "dforder", "epoch_v*"))
+    assert _tree(tmp_path) == before
 
 
 _DOC = "one two three four five six seven eight nine ten eleven"
@@ -214,6 +223,30 @@ def test_store_of_an_earlier_layout_is_refused(spark, tmp_path, layout):
         step(spark, idx, out)
     assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
     assert sorted(glob.glob(f"{tmp_path}/**", recursive=True)) == before
+
+
+def test_resorted_setsim_store_is_refused(spark, tmp_path):
+    """A setsim store whose prefix manifest names a document-frequency
+    order snapshot (``dforder_dir``, written by an earlier layout's
+    compaction re-sort) holds prefix rows in that order, which the md5
+    order would probe unsoundly.  Its next batch and its compaction both
+    raise before any write."""
+    idx, out = str(tmp_path / "idx"), str(tmp_path / "out")
+    setsimdedup.dedup_setsim_batch_against_index(
+        spark.createDataFrame([(1, _DOC)], "doc_id bigint, text string"),
+        0, out, idx)
+    setsimdedup.compact_setsim_index(spark, idx, through=0)
+    manifest = os.path.join(idx, "prefix", "_compaction.json")
+    with open(manifest) as f:
+        m = json.load(f)
+    with open(manifest, "w") as f:
+        json.dump({**m, "dforder_dir": "epoch_v1"}, f)
+    before = _tree(tmp_path)
+    with pytest.raises(ValueError, match="replaying its source"):
+        _next_setsim(spark, idx, out)
+    with pytest.raises(ValueError, match="replaying its source"):
+        setsimdedup.compact_setsim_index(spark, idx, through=0)
+    assert _tree(tmp_path) == before
 
 
 def _sources():

@@ -1,7 +1,8 @@
 """Session configuration has one owner, ``session.py``: the conf table,
 the core count (read at call time), the data-derived shuffle
-partition rule and the static codegen cache size.  Every case runs on
-``spark.newSession()`` so the shared fixture's confs stay untouched."""
+partition rule, the static codegen cache size and the console progress
+bar.  Every case runs on ``spark.newSession()`` so the shared fixture's
+confs stay untouched."""
 
 from __future__ import annotations
 
@@ -23,6 +24,7 @@ PACKAGE = os.path.join(ROOT, "mental_health_bigdata_project_spark")
 SESSION_PY = os.path.join(PACKAGE, "session.py")
 PARTITIONS = "spark.sql.shuffle.partitions"
 CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+CONSOLE_PROGRESS = "spark.ui.showConsoleProgress"
 
 
 def test_core_count_read_at_call_time(spark, monkeypatch):
@@ -68,6 +70,15 @@ def test_configure_sizes_codegen_cache(spark):
     assert configure(SparkSession.Builder())._options[CODEGEN_CACHE] == \
         str(CODEGEN_CACHE_ENTRIES)
     assert spark.conf.get(CODEGEN_CACHE) == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_configure_turns_console_progress_off(spark):
+    """Spark's console progress bar ends in a carriage return, so with
+    stdout and stderr in one file it shares a line with the next
+    printed result (``check_oracles.py``'s PASS lines)."""
+    assert configure(SparkSession.Builder())._options[CONSOLE_PROGRESS] == \
+        "false"
+    assert spark.sparkContext.getConf().get(CONSOLE_PROGRESS) == "false"
 
 
 def test_workers_import_package_outside_repo_root(sf_dir, tmp_path):

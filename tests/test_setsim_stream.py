@@ -167,21 +167,10 @@ def test_incremental_setsim_streaming(spark, tmp_path):
     assert acc == {1, 3, 4}
 
 
-def test_setsim_epoch_resort_preserves_results_and_sorts_rarest_first(
-        spark, tmp_path):
-    """compact_setsim_index's df-ordered epoch re-sort (r11): the
-    accepted output across the flip is IDENTICAL to the md5-order
-    pipeline (prefix filtering is lossless under any single total
-    order + exact verify), the epoch pointer commits atomically with
-    the rebuilt prefix store, and the re-sorted arrays really are
-    rarest-first (common shingles at the suffix end)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mental_health_bigdata_project_spark.streaming.compaction import (
-        load_manifest)
-
+def test_setsim_compaction_preserves_accepted_output(spark, tmp_path):
+    """Compacting mid-stream changes no accepted document: the run
+    compacted through batch 1 accepts exactly what the uncompacted run
+    accepts (prefix filtering plus exact verification)."""
     batches = [
         [(1, TEXT_A), (4, TEXT_D)],
         [(2, TEXT_B), (3, TEXT_C)],      # B dups A
@@ -189,50 +178,26 @@ def test_setsim_epoch_resort_preserves_results_and_sorts_rarest_first(
         [(5, TEXT_D), (6, TEXT_SHORT)],  # 5 dups D; short auto-accepts
     ]
 
-    def run(root, compact_at=None, reorder=True):
+    def accepted(root, compact_at=None):
         out, idx = str(root / "out"), str(root / "idx")
         for bid, rows in enumerate(batches):
             setsimdedup.dedup_setsim_batch_against_index(
                 _df(spark, rows), bid, out, idx)
             if compact_at == bid:
-                setsimdedup.compact_setsim_index(spark, idx, through=bid,
-                                                 reorder=reorder)
-        return out, idx
-
-    out_plain, _ = run(tmp_path / "plain", compact_at=None)
-    out_epoch, idx_epoch = run(tmp_path / "epoch", compact_at=1)
-
-    def accepted(out):
+                setsimdedup.compact_setsim_index(spark, idx, through=bid)
         return {r.doc_id for r in
                 spark.read.parquet(f"{out}/accepted").collect()}
 
-    assert accepted(out_epoch) == accepted(out_plain) == {1, 4, 3, 8, 6}
-
-    # the pointer is in the prefix manifest and the snapshot exists
-    m = load_manifest(f"{idx_epoch}/prefix")
-    assert m and "dforder_dir" in m
-    assert os.path.isdir(os.path.join(idx_epoch, "dforder",
-                                      m["dforder_dir"]))
-
-    # rarest-first: in the compacted arrays, each element's df must be
-    # monotonically non-decreasing along the array
-    dford = {r["shingle"]: r["dfreq"] for r in spark.read.parquet(
-        os.path.join(idx_epoch, "dforder", m["dforder_dir"])).collect()}
-    comp = (spark.read.parquet(
-        os.path.join(f"{idx_epoch}/arrs", "_compacted_v1"))
-        if os.path.isdir(os.path.join(f"{idx_epoch}/arrs",
-                                      "_compacted_v1")) else None)
-    assert comp is not None
-    for row in comp.collect():
-        dfs = [dford[s] for s in row["arr"]]
-        assert dfs == sorted(dfs), f"doc {row['doc_id']} not df-sorted"
+    assert accepted(tmp_path / "compacted", compact_at=1) == \
+        accepted(tmp_path / "plain") == {1, 4, 3, 8, 6}
 
 
-def test_setsim_partial_horizon_compaction_keeps_order(spark, tmp_path):
-    """With deltas above ``through`` the store CANNOT re-sort (the
-    surviving deltas were written under the current order); compaction
-    must fold under that order, keep any existing epoch pointer, and
-    stay correct."""
+def test_setsim_partial_horizon_compaction_and_recompaction(
+        spark, tmp_path):
+    """With deltas above ``through``, compaction folds the earlier
+    compacted store and the batches through the horizon, leaves the
+    newer delta live, and the mixed store keeps dedup exact, also
+    after a later re-compaction."""
     from mental_health_bigdata_project_spark.streaming.compaction import (
         load_manifest)
 
@@ -241,45 +206,37 @@ def test_setsim_partial_horizon_compaction_keeps_order(spark, tmp_path):
         _df(spark, [(1, TEXT_A)]), 0, out, idx)
     setsimdedup.dedup_setsim_batch_against_index(
         _df(spark, [(4, TEXT_D)]), 1, out, idx)
-    # full-horizon compaction: epoch flip
     setsimdedup.compact_setsim_index(spark, idx, through=1)
     m1 = load_manifest(f"{idx}/prefix")
-    assert "dforder_dir" in m1
 
     # two more batches, then compact only through the FIRST of them:
     # batch 3's doc is a KEPT near-miss (E: J(A,E) ~ 0.22), so its
-    # index delta exists above ``through`` -> no re-sort, pointer
-    # carried over.  (A fully-dropped batch writes no delta dir, and
-    # the store is then correctly re-sortable — covered elsewhere.)
+    # index delta survives above ``through``
     setsimdedup.dedup_setsim_batch_against_index(
         _df(spark, [(2, TEXT_B), (3, TEXT_C)]), 2, out, idx)
     setsimdedup.dedup_setsim_batch_against_index(
         _df(spark, [(5, TEXT_E)]), 3, out, idx)
     setsimdedup.compact_setsim_index(spark, idx, through=2)
     m2 = load_manifest(f"{idx}/prefix")
-    assert m2["dforder_dir"] == m1["dforder_dir"]
     assert m2["version"] == m1["version"] + 1
+    assert os.path.isdir(os.path.join(idx, "prefix", "batch_id=3"))
 
-    # the mixed store (compacted epoch + epoch-ordered delta) still
-    # dedups: an exact copy of A drops, fresh doc accepted
+    # the mixed store (compacted + delta) still dedups: an exact copy
+    # of A drops, the short doc is accepted
     setsimdedup.dedup_setsim_batch_against_index(
         _df(spark, [(9, TEXT_A), (7, TEXT_SHORT)]), 4, out, idx)
     acc = {r.doc_id for r in
            spark.read.parquet(f"{out}/accepted").collect()}
     assert acc == {1, 4, 3, 5, 7}
 
-    # a later FULL-horizon compaction re-sorts again from the mixed
-    # store (previously-compacted rows carry batch_id = old through;
-    # batch 4 wrote no delta — everything was dropped or shingle-less —
-    # so batch 3 is the newest LIVE batch): fresh epoch pointer,
-    # superseded snapshot GC'd, dedup still exact
+    # re-compaction over the mixed store (previously-compacted rows
+    # carry batch_id = old through; batch 4 wrote no delta — everything
+    # was dropped or shingle-less — so batch 3 is the newest LIVE
+    # batch), and dedup stays exact
     setsimdedup.compact_setsim_index(spark, idx, through=3)
-    m3 = load_manifest(f"{idx}/prefix")
-    assert m3["dforder_dir"] != m1["dforder_dir"]
-    assert sorted(os.listdir(os.path.join(idx, "dforder"))) == \
-        [m3["dforder_dir"]]
+    assert load_manifest(f"{idx}/prefix")["version"] == m2["version"] + 1
     setsimdedup.dedup_setsim_batch_against_index(
         _df(spark, [(10, TEXT_C), (11, TEXT_B)]), 5, out, idx)
     acc = {r.doc_id for r in
            spark.read.parquet(f"{out}/accepted").collect()}
-    assert acc == {1, 4, 3, 5, 7}  # C dups 3, B dups 1 via the re-sorted store
+    assert acc == {1, 4, 3, 5, 7}  # C dups 3, B dups 1

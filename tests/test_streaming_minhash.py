@@ -12,11 +12,12 @@ import os
 
 from pyspark.sql import functions as F
 
+from mental_health_bigdata_project_spark.plans.similarity import (
+    portable_minhash_sigs)
 from mental_health_bigdata_project_spark.sources import load_table
 from mental_health_bigdata_project_spark.streaming.minhashstate import (
-
-    compact_minhash_index, group_minhash_sigs, minhash_batch,
-    read_group_sigs, read_overlap, run_incremental_minhash)
+    compact_minhash_index, minhash_batch, read_group_sigs, read_overlap,
+    run_incremental_minhash)
 
 # Long-running parity/e2e/compaction tests: slow tier (r11; see
 # pytest.ini) — the driver's default `pytest tests/ -x -q` gate
@@ -47,7 +48,7 @@ def test_folded_stream_sigs_equal_batch_sigs(spark, sf_dir, tmp_path):
     index_dir = str(tmp_path / "idx")
     d = _feed(spark, sf_dir, index_dir)
     served = _rows(read_group_sigs(spark, index_dir))
-    batch = _rows(group_minhash_sigs(d))
+    batch = _rows(portable_minhash_sigs(d, "source", "text"))
     assert served == batch  # min over batch minima == min over union
 
 
@@ -106,7 +107,7 @@ def test_available_now_runner_and_overlap_sanity(spark, sf_dir, tmp_path):
     q = run_incremental_minhash(stream, str(tmp_path / "ckpt"), index_dir)
     q.awaitTermination(180)
     served = _rows(read_group_sigs(spark, index_dir))
-    assert served == _rows(group_minhash_sigs(d))
+    assert served == _rows(portable_minhash_sigs(d, "source", "text"))
     ov = read_overlap(spark, index_dir).collect()
     n_groups = len(served)
     assert len(ov) == n_groups * (n_groups - 1) // 2
